@@ -28,8 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a query can carry both a failed entry and a plausible time — the
   * -1 raw entries say which reps died. A query whose reported value
   * is -1 had no surviving warm rep and contributes nothing to the
-  * suite total (in count mode too: -1 sentinels are filtered from the
-  * legacy sum as well).
+  * suite total.
   *
   * Field ORDER is part of the contract with the harness: the driver
   * captures only a bounded TAIL of the line (the round-3 artifact kept
@@ -37,9 +36,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `value`/`queries` go last (raw reps go BEFORE them) and per-query
   * seconds are rounded to 3 decimals to keep the whole primary
   * section inside a ~2 KB window.
-  *
-  * The legacy count() pass is opt-in (GRAFT_BENCH_COUNTMODE=1) — it
-  * doubled wall time and measured less.
   *
   * Plan-shape telemetry (r12 verdict #6): `shuffle_bytes` maps each
   * key to `[bytesRead, bytesWritten]` from the SAME warm rep whose
@@ -95,7 +91,7 @@ object Bench {
     * code. */
   private[graft] def benchLine(spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame],
-      reps: Int, countMode: Boolean,
+      reps: Int,
       prior: Map[String, Double] = Map.empty): (String, String) = {
     // FixpointSteps is a process-global map: without this clear, a
     // bench artifact in a JVM that ran other queries first (specs, a
@@ -122,9 +118,6 @@ object Bench {
       df.write.mode("overwrite").format("noop").save()
 
     val names = queries.keys.toSeq.sorted
-    val countTimes = if (countMode) names.map { name =>
-      name -> time(name)(queries(name)(spark, sfDir).count())
-    } else Nil
     // Shuffle meter (r12 verdict #6): wall time on a shared box is
     // noisy, shuffle bytes are a deterministic property of the
     // executed plan — recording them per key makes a plan regression
@@ -218,11 +211,6 @@ object Bench {
         s"\"" + k + "\":" + vs.map(v => r3(v._1)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val total = matTimes.map(_._2).filter(_ >= 0).sum
-    // -1 sentinels must not bias the legacy sum downward either
-    val legacy = if (countMode)
-      s""""value_count":${r3(countTimes.map(_._2).filter(_ >= 0).sum)},""" +
-        s""""queries_count":${jmap(countTimes)},"""
-    else ""
     val failedJson = failed.toSeq.sortBy(_._1)
       .map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
     // Fixpoint step counts (r11 verdict #2): each iterative graph
@@ -251,7 +239,7 @@ object Bench {
         s""""value":${r3(total)},"n_keys":${matTimes.size},""" +
         s""""n_failed":${failed.size},"n_suspect":${suspect.size},""" +
         s""""failed":$fj,"suspect":$sj"""
-    val full = s"{${head(failedJson, suspectJson)},$legacy" +
+    val full = s"{${head(failedJson, suspectJson)}," +
       s""""fixpoint_steps":$stepsJson,"shuffle_bytes":$shuffleJson,""" +
       s""""raw":${jraw(rawTimes)},"queries":${jmap(matTimes)}}"""
     // mass failure must not balloon the headline past the capture
@@ -307,16 +295,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val countMode = sys.env.get("GRAFT_BENCH_COUNTMODE").contains("1")
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Warm-up: trigger file listing, codegen, and JIT once so the
     // first timed query doesn't pay session start-up costs.
     try SparkEntry.queries.get("q1_pricing_summary")
@@ -329,7 +309,7 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val (line, headline) = benchLine(spark, sfDir,
       SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) },
-      reps, countMode, prior = loadPriorQueries())
+      reps, prior = loadPriorQueries())
     println(line)
     // compact headline LAST: the driver keeps a bounded tail of
     // stdout, so the final short line is the one guaranteed to land

@@ -102,10 +102,7 @@ object Ckpt {
     * a row conversion on the (dimension-bounded) frame. Ordinary
     * fixpoints joining a FIXED frame grow stats linearly and do not
     * need this. */
-  def stats(df: DataFrame): DataFrame = {
-    val ck = apply(df)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
+  def stats(df: DataFrame): DataFrame = reset(apply(df))
 
   /** [[stats]] with DEFERRED block materialization ([[lazily]]'s
     * contract): the Catalyst plan truncates to a fresh LogicalRDD
@@ -119,11 +116,8 @@ object Ckpt {
     * partition's block lands, and a frame consumed twice before any
     * action risks duplicate evaluation. Reliable-checkpoint mode
     * falls back to the eager [[stats]] for [[apply]]'s sequencing. */
-  def statsLazily(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(_) => stats(df)
-      case None =>
-        val ck = df.localCheckpoint(false, StorageLevel.DISK_ONLY)
-        ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+  def statsLazily(df: DataFrame): DataFrame = reset(lazily(df))
+
+  private def reset(ck: DataFrame): DataFrame =
+    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for registry keys to files — the
@@ -8,7 +7,7 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: graft.PlanDump <outDir> <key1,key2,...> [suffix]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 4).
+  *      SPARK_GRAFT_CPUS (default: all cores).
   *
   * Each file holds the FORMATTED physical plan of the query as built
   * against the sf dir — the same plan the bench's noop write executes
@@ -22,14 +21,7 @@ object PlanDump {
     val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val suffix = if (args.length > 2) args(2) else ""
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     keys.foreach { k =>
       val fn = SparkEntry.queries.getOrElse(k,
         sys.error(s"unknown registry key: $k"))

@@ -10,95 +10,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** d7's decision frame, memoized per (session, sf dir) so d8's entry
-    * reuses it instead of re-running the whole dedup pipeline (the r3
-    * bench double-ran ~4 s of banding + clustering). d7's own entry
-    * ALWAYS recomputes and refreshes the memo — its bench timing stays
-    * honest — while d8 pays only the histogram aggregations (plus one
-    * cheap re-join through d7's checkpointed cluster labels). Safe to
-    * reuse across entries: the expensive stages sit behind eager
-    * checkpoints inside dedupPipeline, and results are deterministic. */
-  private val d7Memo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]])
-  private def d7MemoFor(s: SparkSession) = d7Memo.computeIfAbsent(
-    s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame])
-  private def d7Decision(s: SparkSession, d: String): DataFrame = {
-    val res = Dedup.dedupPipeline(s, d)
-    d7MemoFor(s).put(d, res)
-    res
-  }
-  private def d8Histogram(s: SparkSession, d: String): DataFrame =
-    Dedup.clusterHistogram(
-      Option(d7MemoFor(s).get(d)).getOrElse(d7Decision(s, d)))
-  private def d9KeepBest(s: SparkSession, d: String): DataFrame =
-    Dedup.keepBest(
-      Option(d7MemoFor(s).get(d)).getOrElse(d7Decision(s, d)),
-      Tables.parallel(Tables.load(s, d, "documents")))
-
-  /** The s17 NN-Descent edge frame, memoized per (session, sf dir) —
-    * the production vector-index shape is ONE build, many searches
-    * (d7Memo's pattern): the s17 entry ALWAYS rebuilds and refreshes
-    * the memo (its bench timing stays honest), while the s18/s22
-    * searches reuse the checkpointed build. Deterministic, so reuse
-    * is observationally identical to a rebuild. */
-  private val annMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]])
-  private def annMemoFor(s: SparkSession) = annMemo.computeIfAbsent(
-    s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame])
   private def annEmb(s: SparkSession, d: String): DataFrame =
     Tables.parallel(Tables.load(s, d, "embeddings"))
-  private def annBuild(s: SparkSession, d: String): DataFrame = {
-    val emb = annEmb(s, d)
-    val edges = Similarity.knnGraphEdges(emb,
-      Similarity.KnnK, Similarity.KnnRounds)
-    annMemoFor(s).put(d, edges)
-    // s17 owns BOTH index layers (r19, closing the r18 verdict's
-    // honesty gap): the coarse-layer graph is rebuilt here on EVERY
-    // call too, so the bench times the full hierarchical index build
-    // under the builder key every rep — nothing about the index lands
-    // only in a dropped cold rep. Both builds are deterministic, so
-    // the memo consumers (s18/s22) see frames identical to a rebuild.
-    annMemoFor(s).put("s22coarse|" + d, Similarity.hnswCoarseEdges(emb))
-    edges
-  }
-  private def annEdges(s: SparkSession, d: String): DataFrame =
-    Option(annMemoFor(s).get(d)).getOrElse(annBuild(s, d))
-
-  /** s22's coarse-layer index — rebuilt (and refreshed into the memo)
-    * by [[annBuild]] under s17, the index-builder key, every call;
-    * this accessor only covers a session where s22 runs before s17
-    * ever built (then the one-off build is paid, visibly, inside
-    * s22's own timing). */
-  private def s22CoarseEdges(s: SparkSession, d: String): DataFrame =
-    Option(annMemoFor(s).get("s22coarse|" + d)).getOrElse {
-      val ce = Similarity.hnswCoarseEdges(annEmb(s, d))
-      annMemoFor(s).put("s22coarse|" + d, ce)
-      ce
-    }
-
-  /** g28's checkpointed spanning forest, memoized per (session, sf
-    * dir) — the third instance of the "one expensive build, many
-    * consumers" memo (d7Memo, annMemo; r17 verdict #1): the MSF IS
-    * the single-linkage dendrogram, so g29's cuts (and any future
-    * dendrogram consumer) reuse the forest g28 just built instead of
-    * re-running the fact-scale co-purchase aggregate + Borůvka (the
-    * r19 bench's one weak shape: g29 spent 21 s rebuilding a frame
-    * whose post-forest tail costs ~2 s). g28's entry ALWAYS rebuilds
-    * and refreshes the memo — its bench timing stays honest — and the
-    * forest is deterministic, so reuse is observationally identical
-    * to a rebuild (memo-vs-rebuild identity spec-gated in GraphSpec). */
-  private val msfMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]])
-  private def msfMemoFor(s: SparkSession) = msfMemo.computeIfAbsent(
-    s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame])
-  private def msfForest(s: SparkSession, d: String): DataFrame = {
-    val forest = Graph.g28ForestFrame(s, d)
-    msfMemoFor(s).put(d, forest)
-    forest
-  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -132,7 +45,7 @@ object SparkEntry {
     "q28_keyset" -> ((s: SparkSession, d: String) => Relational.q28Keyset(s, d)),
     "q29_scalar_subquery" -> (Relational.q29ScalarSubquery _),
     "q30_bray_curtis" ->
-      ((s: SparkSession, d: String) => SharedBuilds.bcRebuild(s, d)),
+      ((s: SparkSession, d: String) => Memo.bc.refresh(s, d)),
     "q44_taxonomy_unifrac" -> (Relational.q44TaxonomyUnifrac _),
     "q45_core_taxa" -> (Relational.q45CoreTaxa _),
     "q46_permanova" -> (Relational.q46Permanova _),
@@ -185,10 +98,10 @@ object SparkEntry {
     "t47_pmi" ->
       ((s: SparkSession, d: String) => TextOps.t47Pmi(s, d)),
     "s22_hnsw" -> ((s: SparkSession, d: String) =>
-      Similarity.hnswSearchOn(annEmb(s, d), annEdges(s, d),
+      Similarity.hnswSearchOn(annEmb(s, d), Memo.ann.get(s, d),
         Similarity.KnnK, Similarity.KnnRounds,
         Similarity.SearchBeam, Similarity.SearchHops,
-        coarseEdges0 = s22CoarseEdges(s, d))),
+        coarseEdges0 = Memo.s22Coarse.get(s, d))),
     "q63_multi_beta" -> (Relational.q63MultiBeta _),
     "g24_ktruss" -> (Graph.g24Ktruss _),
     "g26_homophily" -> (Graph.g26Homophily _),
@@ -201,7 +114,7 @@ object SparkEntry {
     "q70_rankindex" -> (Relational.q70Rankindex _),
     "q71_multipatt" -> (Relational.q71Multipatt _),
     "q31_pcoa" ->
-      ((s: SparkSession, d: String) => SharedBuilds.pcoaAxesRebuild(s, d)),
+      ((s: SparkSession, d: String) => Memo.pcoa.refresh(s, d)),
     "q73_ca" -> ((s: SparkSession, d: String) => Ordination.q73Ca(s, d)),
     "q74_cca" -> ((s: SparkSession, d: String) => Ordination.q74Cca(s, d)),
     "q75_rda" -> ((s: SparkSession, d: String) => Ordination.q75Rda(s, d)),
@@ -268,9 +181,12 @@ object SparkEntry {
     "b3_kmer_profile" -> (Dedup.kmerProfile _),
     "b4_banded_align" -> ((s: SparkSession, d: String) => Dedup.bandedAlign(s, d)),
     "b5_minimizers" -> ((s: SparkSession, d: String) => Dedup.minimizerProfile(s, d)),
-    "d7_dedup_pipeline" -> (d7Decision _),
-    "d8_cluster_histogram" -> (d8Histogram _),
-    "d9_keep_best" -> (d9KeepBest _),
+    "d7_dedup_pipeline" -> (Memo.d7.refresh _),
+    "d8_cluster_histogram" -> ((s: SparkSession, d: String) =>
+      Dedup.clusterHistogram(Memo.d7.get(s, d))),
+    "d9_keep_best" -> ((s: SparkSession, d: String) =>
+      Dedup.keepBest(Memo.d7.get(s, d),
+        Tables.parallel(Tables.load(s, d, "documents")))),
     "d6_decontaminate" -> (Dedup.decontaminate _),
     "d14_bloom_decontaminate" -> (Dedup.bloomDecontaminate _),
     "d15_incremental_dedup" -> (Dedup.incrementalDedup _),
@@ -310,15 +226,13 @@ object SparkEntry {
     "g27_jaccard_link" ->
       ((s: SparkSession, d: String) => Graph.g27JaccardLink(s, d)),
     "g28_msf" -> ((s: SparkSession, d: String) =>
-      msfForest(s, d).orderBy("a", "b")),
+      Memo.msf.refresh(s, d).orderBy("a", "b")),
     "g29_single_linkage" -> ((s: SparkSession, d: String) =>
       Graph.g29CutsOverForest(
-        Option(msfMemoFor(s).get(d)).getOrElse(msfForest(s, d)),
-        Graph.G29Cuts)),
+        Memo.msf.get(s, d), Graph.G29Cuts)),
     "g30_cluster_stability" -> ((s: SparkSession, d: String) =>
       Graph.g30StabilityOverForest(
-        Option(msfMemoFor(s).get(d)).getOrElse(msfForest(s, d)),
-        Graph.G29Cuts)),
+        Memo.msf.get(s, d), Graph.G29Cuts)),
     "g31_rich_club" ->
       ((s: SparkSession, d: String) => Graph.g31RichClub(s, d)),
     "g32_knn_degree" ->
@@ -397,9 +311,13 @@ object SparkEntry {
     "s15_ivf_append" -> ((s: SparkSession, d: String) => Similarity.ivfAppend(s, d)),
     "s16_kcenter" -> ((s: SparkSession, d: String) => Similarity.kcenterSelect(s, d)),
     "s17_knn_graph" -> ((s: SparkSession, d: String) =>
-      Similarity.knnGraphFormat(annBuild(s, d))),
+      Similarity.knnGraphFormat {
+        val edges = Memo.ann.refresh(s, d)
+        Memo.s22Coarse.refresh(s, d)
+        edges
+      }),
     "s18_graph_search" -> ((s: SparkSession, d: String) =>
-      Similarity.graphSearchOn(annEmb(s, d), annEdges(s, d),
+      Similarity.graphSearchOn(annEmb(s, d), Memo.ann.get(s, d),
         Similarity.SearchBeam, Similarity.SearchHops)),
     "s19_pca_embed" -> ((s: SparkSession, d: String) => Similarity.pcaEmbed(s, d)),
     "s20_bq_hamming" -> (Similarity.bqHamming _),

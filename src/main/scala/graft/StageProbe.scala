@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level wall profile for one registry key — the no-UI stand-in
   * for the Spark UI's Stages page (guide §7.1): runs the key once
@@ -12,21 +11,15 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val key = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // diagnostic-only conf overrides, e.g. "spark.sql.adaptive.enabled=false"
-    // (semicolon-separated) — the BENCH path never reads this
+    val spark = LocalSession()
+    // diagnostic-only runtime SQL conf overrides, e.g.
+    // "spark.sql.adaptive.enabled=false" (semicolon-separated) — the
+    // BENCH path never reads this
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
       .map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
+        spark.conf.set(k, v)
       })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(key)
     def run(): Unit =
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()

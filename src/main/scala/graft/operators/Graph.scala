@@ -2696,16 +2696,12 @@ object Graph {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** [[g28Msf]]'s forest as a CHECKPOINTED frame — the memoizable
-    * build product for SparkEntry's msfMemo (the d7/ann "one expensive
-    * build, many consumers" pattern, r17 verdict #1): the MSF is the
-    * single-linkage dendrogram (Gower & Ross 1969), so every
-    * dendrogram consumer ([[g29SingleLinkage]]'s cuts today, any
-    * future cut level) needs exactly this frame, and rebuilding it
-    * per consumer re-runs the fact-scale pair aggregate + Borůvka the
-    * builder just ran. At 100 TB this is the materialized forest
-    * TABLE all cut levels read. Deterministic, so reuse is
-    * observationally identical to a rebuild. */
+  /** [[g28Msf]]'s forest as a CHECKPOINTED frame — the build behind
+    * `graft.Memo.msf`: the MSF is the single-linkage dendrogram
+    * (Gower & Ross 1969), so every dendrogram consumer
+    * ([[g29SingleLinkage]]'s cuts, any future cut level) needs
+    * exactly this frame. At 100 TB this is the materialized forest
+    * TABLE all cut levels read. */
   def g28ForestFrame(spark: SparkSession, dir: String): DataFrame =
     graft.Ckpt(msfCore(coPurchasePairs(spark, dir), "g28_msf")._1)
 
@@ -2861,11 +2857,6 @@ object Graph {
       .orderBy("cluster")
   }
 
-  /** Stats-resetting checkpoint for iterated self-join state (the
-    * pointer-doubling ladder) — see [[graft.Ckpt.stats]], where the
-    * helper now lives so q72's Guttman loop shares it. */
-  private def statsCkpt(df: DataFrame): DataFrame = graft.Ckpt.stats(df)
-
   /** [[g28Msf]]'s core over an (a, b, cnt) weighted undirected edge
     * frame (a < b, non-negative long ids) — split out for planted
     * specs. The selection key ((maxCnt − cnt)·(P+1)² + a·(P+1) + b)
@@ -2974,7 +2965,7 @@ object Graph {
           when(col("pkey") === col("key"),
             least(col("c"), col("partner")))
             .otherwise(col("partner")).as("par"))
-      var par = statsCkpt(par0.select(col("c").as("id"), col("par")))
+      var par = graft.Ckpt.stats(par0.select(col("c").as("id"), col("par")))
       // stats-reset checkpoint EVERY doubling step: an un-checkpointed
       // self-join ladder doubles the plan per step and Catalyst's
       // sizeInBytes statistics explode as N^(2^k) BigIntegers — the

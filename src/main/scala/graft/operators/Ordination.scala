@@ -53,7 +53,7 @@ object Ordination {
     aggregate(arr, lit(0.0), (acc, x) => greatest(acc, abs(x)))
 
   def q31Pcoa(spark: SparkSession, dir: String, iters: Int = Iters): DataFrame =
-    pcoa(SharedBuilds.bc(spark, dir), iters)
+    pcoa(graft.Memo.bc.get(spark, dir), iters)
 
   /** Eigenvalue summary of the same ordination: one row per axis with
     * the Rayleigh-quotient eigenvalue and its share of total inertia
@@ -62,7 +62,7 @@ object Ordination {
     * axes. k = 3 shows the axis count is free, not a hard-coded 2. */
   def q31cPcoaEigen(spark: SparkSession, dir: String, k: Int = 3,
       iters: Int = Iters): DataFrame =
-    pcoaEigen(SharedBuilds.bc(spark, dir), k, iters)
+    pcoaEigen(graft.Memo.bc.get(spark, dir), k, iters)
 
   /** The single-row centered Gram pipeline shared by [[pcoa]] and
     * [[pcoaEigen]]: symmetric D² assembly → one array<array<double>>
@@ -247,13 +247,13 @@ object Ordination {
     * `ckptEvery` steps (plan depth stays bounded, jobs stay tiny). */
   def q31PcoaBlocked(spark: SparkSession, dir: String, iters: Int = Iters,
       ckptEvery: Int = 3): DataFrame =
-    pcoaBlocked(SharedBuilds.bc(spark, dir), iters, ckptEvery)
+    pcoaBlocked(graft.Memo.bc.get(spark, dir), iters, ckptEvery)
 
   /** Blocked eigenvalue summary — bit-identical to [[pcoaEigen]]
     * (spec-gated), distributed like [[pcoaBlocked]]. */
   def q31dPcoaBlockedEigen(spark: SparkSession, dir: String, k: Int = 3,
       iters: Int = Iters, ckptEvery: Int = 3): DataFrame =
-    pcoaBlockedEigen(SharedBuilds.bc(spark, dir), k, iters, ckptEvery)
+    pcoaBlockedEigen(graft.Memo.bc.get(spark, dir), k, iters, ckptEvery)
 
   /** Sample-count bound for the single-row form: n² doubles in ONE
     * task row — ~32 MB at n = 2 000, the documented comfort edge.
@@ -725,9 +725,9 @@ object Ordination {
     * taxa)-bounded with per-taxon fold state ≤ the sample dim. */
   def q78Wascores(spark: SparkSession, dir: String,
       iters: Int = Iters): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     wascoresFromInputs(ab,
-      if (iters == Iters) SharedBuilds.pcoaAxes(spark, dir)
+      if (iters == Iters) graft.Memo.pcoa.get(spark, dir)
       else q31Pcoa(spark, dir, iters))
   }
 
@@ -790,7 +790,7 @@ object Ordination {
 
   def q73Ca(spark: SparkSession, dir: String,
       iters: Int = CaIters): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     caFromAbundance(ab, iters)
   }
 
@@ -821,7 +821,7 @@ object Ordination {
     * biplot invariant. Folds over i in sample order, roundz-6. */
   def q76CaSpecies(spark: SparkSession, dir: String,
       iters: Int = CaIters): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     caSpeciesFromAbundance(ab, iters)
   }
 
@@ -944,7 +944,7 @@ object Ordination {
     * everything after is dimension-bounded single-row jobs. */
   def q74Cca(spark: SparkSession, dir: String,
       iters: Int = CaIters): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     ccaFromInputs(ab, Relational.bioenvEnv(spark, dir), iters)
   }
 
@@ -976,7 +976,7 @@ object Ordination {
     * and irrelevant to the plot's geometry. */
   def q75Rda(spark: SparkSession, dir: String,
       iters: Int = CaIters): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     rdaFromInputs(ab, Relational.bioenvEnv(spark, dir), iters)
   }
 
@@ -1011,7 +1011,7 @@ object Ordination {
     * the rank-3 projection stays a broadcast of P/W. */
   def q77Dbrda(spark: SparkSession, dir: String,
       iters: Int = CaIters): DataFrame =
-    dbrdaFromInputs(SharedBuilds.bc(spark, dir),
+    dbrdaFromInputs(graft.Memo.bc.get(spark, dir),
       Relational.bioenvEnv(spark, dir), iters)
 
   /** [[q77Dbrda]]'s core over a (sample_a, sample_b, bray_curtis)
@@ -1102,7 +1102,7 @@ object Ordination {
     * single row. At 10⁴⁺ samples the same trace identity runs over
     * q31b's distributed triples with X_r broadcast. */
   def q86AnovaDbrda(spark: SparkSession, dir: String): DataFrame =
-    anovaDbrdaFromInputs(SharedBuilds.bc(spark, dir),
+    anovaDbrdaFromInputs(graft.Memo.bc.get(spark, dir),
       Relational.bioenvEnv(spark, dir),
       graft.Tables.dim(spark, dir, "nation")
         .select(col("n_name"), col("n_nationkey").as("k")))
@@ -1336,7 +1336,7 @@ object Ordination {
     * row; at 10⁴⁺ samples the identity runs over q31b's distributed
     * triples with X_r broadcast. */
   def q88Varpart(spark: SparkSession, dir: String): DataFrame =
-    varpartFromInputs(SharedBuilds.bc(spark, dir),
+    varpartFromInputs(graft.Memo.bc.get(spark, dir),
       Relational.bioenvEnv(spark, dir))
 
   /** [[q88Varpart]]'s core over a (sample_a, sample_b, bray_curtis)
@@ -2138,8 +2138,8 @@ object Ordination {
     * triples and keep the same window/aggregate algebra. */
   def q72Nmds(spark: SparkSession, dir: String,
       iters: Int = NmdsIters): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
-    nmds(bc, SharedBuilds.pcoaAxes(spark, dir), iters)
+    val bc = graft.Memo.bc.get(spark, dir)
+    nmds(bc, graft.Memo.pcoa.get(spark, dir), iters)
   }
 
   /** [[q72Nmds]]'s core over a (sample_a, sample_b, bray_curtis) pair

@@ -509,14 +509,14 @@ object Relational {
     * ABUNDANCE MATRIX — the one fact-scale aggregate behind q30's
     * Bray–Curtis and, identically, q52/q70/q71/q73–q76/q78/q79
     * (r18: each of those keys re-ran this 5-table join + aggregate;
-    * they now share it through SharedBuilds.abq, builder = q30).
+    * they now share it through graft.Memo.abq, owner = q30).
     * Checkpointed: referenced by totals, both sides of the pair
     * join, and the ordination — without materialization each
     * reference re-runs the fact-scale join+aggregation and only
     * runtime ReuseExchange MIGHT dedupe the scans. The frame is
     * aggregate-bounded (samples × taxa), so this pins "fact touched
     * once" structurally instead of hoping. */
-  private[operators] def abundanceQty(spark: SparkSession,
+  private[graft] def abundanceQty(spark: SparkSession,
       dir: String): DataFrame = {
     val l = Tables.load(spark, dir, "lineitem")
     graft.Ckpt(l
@@ -529,9 +529,8 @@ object Relational {
   }
 
   /** The checkpointed (n_name, taxon) PRESENCE frame shared by
-    * q56/q57/q60/q63/q64/q80 (r18; builder = q56 via
-    * SharedBuilds.presRebuild). */
-  private[operators] def presenceFrame(spark: SparkSession,
+    * q56/q57/q60/q63/q64/q80 (r18; graft.Memo.pres, owner = q56). */
+  private[graft] def presenceFrame(spark: SparkSession,
       dir: String): DataFrame = {
     val l = Tables.load(spark, dir, "lineitem")
     graft.Ckpt(l
@@ -542,9 +541,8 @@ object Relational {
   }
 
   /** The checkpointed (n_name, l_partkey, cnt) COUNT abundance frame
-    * shared by q53/q58/q65/q66 (r18; builder = q53 via
-    * SharedBuilds.abCntRebuild). */
-  private[operators] def abundanceCnt(spark: SparkSession,
+    * shared by q53/q58/q65/q66 (r18; graft.Memo.abCnt, owner = q53). */
+  private[graft] def abundanceCnt(spark: SparkSession,
       dir: String): DataFrame = {
     val l = Tables.load(spark, dir, "lineitem")
     graft.Ckpt(l
@@ -556,7 +554,7 @@ object Relational {
   }
 
   def q30BrayCurtis(spark: SparkSession, dir: String): DataFrame =
-    brayCurtisFromAbundance(SharedBuilds.abqRebuild(spark, dir))
+    brayCurtisFromAbundance(graft.Memo.abq.refresh(spark, dir))
 
   /** [[q30BrayCurtis]]'s core over a pre-aggregated (n_name, p_type,
     * qty DECIMAL) matrix — split out so q47 can derive BOTH of its
@@ -615,14 +613,14 @@ object Relational {
     * a DECIMAL sum (order-free, partitioning-independent); the single
     * double division happens once at the end. */
   def q44TaxonomyUnifrac(spark: SparkSession, dir: String): DataFrame =
-    unifracFromLeaves(SharedBuilds.ufLeavesRebuild(spark, dir))
+    unifracFromLeaves(graft.Memo.ufLeaves.refresh(spark, dir))
 
   /** The checkpointed (sample × tree-leaf) abundance matrix under
     * q44's derived hierarchy — the ONE fact-scale pass q44 and q47
     * share (q47 additionally rolls it up to q30's (sample, taxon)
     * matrix; exact DECIMAL sums make that rollup bit-identical to
     * q30's direct aggregate). */
-  private[operators] def unifracLeafAbundance(spark: SparkSession,
+  private[graft] def unifracLeafAbundance(spark: SparkSession,
       dir: String): DataFrame = {
     val l = Tables.load(spark, dir, "lineitem")
     val p = Tables.dim(spark, dir, "part")
@@ -1120,7 +1118,7 @@ object Relational {
     * partitions by permutation (n rows each). Nothing here ever
     * touches the fact table again. */
   def q46Permanova(spark: SparkSession, dir: String): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -1319,9 +1317,9 @@ object Relational {
     // ONE fact-scale pass: q30's (sample, taxon) matrix is an exact
     // DECIMAL rollup of q44's leaf matrix, so both input matrices
     // derive from the same checkpointed leaf aggregate bit-for-bit
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
       .select(col("sample_a"), col("sample_b"), col("bray_curtis").as("x"))
-    val uf = SharedBuilds.uf(spark, dir)
+    val uf = graft.Memo.uf.get(spark, dir)
       .select(col("sample_a"), col("sample_b"), col("unifrac").as("y"))
     val nat = Tables.dim(spark, dir, "nation")
       .select(col("n_name"), col("n_nationkey").as("k"))
@@ -1528,9 +1526,9 @@ object Relational {
     * dimension-bounded; pairs and the (P+1) lattice are
     * sample-dim-bounded. */
   def q68PartialMantel(spark: SparkSession, dir: String): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
       .select(col("sample_a"), col("sample_b"), col("bray_curtis").as("x"))
-    val uf = SharedBuilds.uf(spark, dir)
+    val uf = graft.Memo.uf.get(spark, dir)
       .select(col("sample_a"), col("sample_b"), col("unifrac").as("y"))
     val z = envZScores(bioenvEnv(spark, dir))
     val d3812 = "decimal(38,12)"
@@ -1826,7 +1824,7 @@ object Relational {
     * and the (P+1) lattice all sample-dim-bounded; the class ladder a
     * C-row broadcast. */
   def q87MantelCorrelog(spark: SparkSession, dir: String): DataFrame = {
-    val bcp = SharedBuilds.bc(spark, dir)
+    val bcp = graft.Memo.bc.get(spark, dir)
       .select(col("sample_a"), col("sample_b"),
         col("bray_curtis").as("x"))
     val nat = Tables.dim(spark, dir, "nation")
@@ -2362,7 +2360,7 @@ object Relational {
     * label lattice is sample-dim-bounded², and every window/rollup
     * after is group- or permutation-bounded. */
   def q49Betadisper(spark: SparkSession, dir: String): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -2613,7 +2611,7 @@ object Relational {
     * frame — the constant-key bounded-window idiom), and the
     * (P+1)-label lattice are all dimension-bounded. */
   def q51Anosim(spark: SparkSession, dir: String): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -2779,7 +2777,7 @@ object Relational {
     * checkpointed abundance aggregate; the pair frame and the
     * (P+1)-label lattice are sample-dimension-bounded throughout. */
   def q67Mrpp(spark: SparkSession, dir: String): DataFrame = {
-    val bc = SharedBuilds.bc(spark, dir)
+    val bc = graft.Memo.bc.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -2942,7 +2940,7 @@ object Relational {
     * (P+1) × taxa × groups. Absent (taxon, sample) cells never
     * materialize — presence counts fall out of the sparse join. */
   def q52Indval(spark: SparkSession, dir: String): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -3103,7 +3101,7 @@ object Relational {
     * the combo lattice is (P+1) × taxa × (2^groups − 2) rows with a
     * FIXED group vocabulary — dimension-bounded throughout. */
   def q71Multipatt(spark: SparkSession, dir: String): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     val nat = Tables.dim(spark, dir, "nation")
       .join(Tables.dim(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -3282,7 +3280,7 @@ object Relational {
     * occurrences) with map-side combine, then one sample-keyed
     * integer rollup — everything after is sample-dim-bounded. */
   def q53RichnessEstimators(spark: SparkSession, dir: String): DataFrame =
-    richnessFromCounts(SharedBuilds.abCntRebuild(spark, dir))
+    richnessFromCounts(graft.Memo.abCnt.refresh(spark, dir))
 
   /** [[q53RichnessEstimators]]'s core over a (n_name, taxon-keyed,
     * cnt BIGINT) occurrence matrix — split out for planted specs. */
@@ -3463,7 +3461,7 @@ object Relational {
     * one customer-dim aggregate; everything here is samples × (P+1)
     * bounded. */
   def q55Protest(spark: SparkSession, dir: String): DataFrame = {
-    val x = SharedBuilds.pcoaAxes(spark, dir)
+    val x = graft.Memo.pcoa.get(spark, dir)
       .select(col("sample").as("n_name"),
         col("axis1").as("x1"), col("axis2").as("x2"))
     // per-nation geographic centroid on the EXACT integer centi-degree
@@ -3692,7 +3690,7 @@ object Relational {
     * applies to a ubiquitous taxon); per-sample richness and the
     * pair frame are sample-dim-bounded. */
   def q56BetaPartition(spark: SparkSession, dir: String): DataFrame =
-    betaPartitionFromPresence(SharedBuilds.presRebuild(spark, dir))
+    betaPartitionFromPresence(graft.Memo.pres.refresh(spark, dir))
 
   /** [[q56BetaPartition]]'s core over a (n_name, taxon) presence
     * frame — split out for planted specs. */
@@ -3794,7 +3792,7 @@ object Relational {
     * taxon-keyed occupancy count, then a (taxa × N) in-row lattice —
     * dimension-bounded; the curve is monotone by construction. */
   def q57SpecAccum(spark: SparkSession, dir: String): DataFrame =
-    specAccumFromPresence(SharedBuilds.pres(spark, dir))
+    specAccumFromPresence(graft.Memo.pres.get(spark, dir))
 
   /** [[q57SpecAccum]]'s core over a (n_name, taxon) presence frame —
     * split out for planted specs. */
@@ -3867,7 +3865,7 @@ object Relational {
     * one taxon-scale projection + one group-scale aggregate. Nothing
     * quadratic, nothing iterated. */
   def q58HillNumbers(spark: SparkSession, dir: String): DataFrame =
-    hillFromCounts(SharedBuilds.abCnt(spark, dir))
+    hillFromCounts(graft.Memo.abCnt.get(spark, dir))
 
   /** [[q58HillNumbers]]'s core over a (n_name, taxon-keyed, cnt
     * BIGINT) abundance frame — split out for planted specs. */
@@ -4060,7 +4058,7 @@ object Relational {
     * self-join bounded by taxon occupancy (the q30 pair class), then
     * the sample-pair-bounded in-row lattice. */
   def q60RaupCrick(spark: SparkSession, dir: String): DataFrame =
-    raupCrickFromPresence(SharedBuilds.pres(spark, dir))
+    raupCrickFromPresence(graft.Memo.pres.get(spark, dir))
 
   /** [[q60RaupCrick]]'s core over a (n_name, taxon) presence frame —
     * split out for planted specs. */
@@ -4229,7 +4227,7 @@ object Relational {
     * sample-dim-bounded pair frame; the multi-site reduction adds one
     * single-row aggregate on top. */
   def q63MultiBeta(spark: SparkSession, dir: String): DataFrame =
-    multiBetaFromPresence(SharedBuilds.pres(spark, dir))
+    multiBetaFromPresence(graft.Memo.pres.get(spark, dir))
 
   /** [[q63MultiBeta]]'s core over a (n_name, taxon) presence frame —
     * split out for planted specs. */
@@ -4349,7 +4347,7 @@ object Relational {
     // the ordination is referenced by samples/means/centering below —
     // checkpoint it so the PCoA power iteration runs ONCE, not per
     // reference (this was a measured 52 s → ~6 s cut at sf0.1)
-    val x = SharedBuilds.pcoaAxes(spark, dir)
+    val x = graft.Memo.pcoa.get(spark, dir)
       .select(col("sample").as("n_name"),
         col("axis1").as("x1"), col("axis2").as("x2"))
     val nat = Tables.dim(spark, dir, "nation")
@@ -4602,7 +4600,7 @@ object Relational {
     * the sparse (group, taxon) matrix, group-bounded everything
     * after. */
   def q65Renyi(spark: SparkSession, dir: String): DataFrame =
-    renyiFromCounts(SharedBuilds.abCnt(spark, dir))
+    renyiFromCounts(graft.Memo.abCnt.get(spark, dir))
 
   /** [[q65Renyi]]'s core over a (n_name, taxon-keyed, cnt BIGINT)
     * abundance frame — split out for planted specs. */
@@ -4726,7 +4724,7 @@ object Relational {
     * (samples × distinct-counts × grid) lattice — dimension-bounded
     * with in-row folds of length n. */
   def q66Rarefy(spark: SparkSession, dir: String): DataFrame =
-    rarefyFromCounts(SharedBuilds.abCnt(spark, dir), RarefyGrid)
+    rarefyFromCounts(graft.Memo.abCnt.get(spark, dir), RarefyGrid)
 
   /** [[q66Rarefy]]'s core over a (n_name, taxon-keyed, cnt BIGINT)
     * abundance frame — split out for planted specs. */
@@ -4954,7 +4952,7 @@ object Relational {
     * constant-key idiom), the env lattice, and the 5-row output are
     * all dimension-bounded. */
   def q70Rankindex(spark: SparkSession, dir: String): DataFrame = {
-    val ab = SharedBuilds.abq(spark, dir)
+    val ab = graft.Memo.abq.get(spark, dir)
     rankindexFromInputs(ab, envZScores(bioenvEnv(spark, dir)))
   }
 
@@ -5232,7 +5230,7 @@ object Relational {
     * corpus; everything here is pairs × subsets bounded (the subset
     * lattice is 2^vars − 1 with a FIXED variable vocabulary). */
   def q62Bioenv(spark: SparkSession, dir: String): DataFrame = {
-    val bcp = SharedBuilds.bc(spark, dir)
+    val bcp = graft.Memo.bc.get(spark, dir)
       .select(col("sample_a"), col("sample_b"),
         col("bray_curtis").as("bc"))
     bioenvFromInputs(bcp, bioenvEnv(spark, dir))
@@ -5488,7 +5486,7 @@ object Relational {
     * single double divisions on a round-6 grid. Outputs are
     * non-negative by construction. */
   def q64Nodf(spark: SparkSession, dir: String): DataFrame =
-    nodfFromPresence(SharedBuilds.pres(spark, dir))
+    nodfFromPresence(graft.Memo.pres.get(spark, dir))
 
   /** [[q64Nodf]]'s core over a (n_name, taxon) presence frame — split
     * out for planted specs. */
@@ -5635,7 +5633,7 @@ object Relational {
     * class — vocab-bounded, AQE skew-split on a ubiquitous taxon);
     * the output grid and all joins after are (sites × taxa)-bounded. */
   def q79Beals(spark: SparkSession, dir: String): DataFrame =
-    bealsFromAbundance(SharedBuilds.abq(spark, dir))
+    bealsFromAbundance(graft.Memo.abq.get(spark, dir))
 
   /** [[q79Beals]]'s core over the sparse (n_name, p_type, qty)
     * abundance frame — split out for planted specs. */
@@ -5740,7 +5738,7 @@ object Relational {
     * sees the corpus, and it shuffles the deduplicated (sample,
     * taxon) pairs only. */
   def q80SpecPool(spark: SparkSession, dir: String): DataFrame =
-    specPoolFromPresence(SharedBuilds.pres(spark, dir))
+    specPoolFromPresence(graft.Memo.pres.get(spark, dir))
 
   /** [[q80SpecPool]]'s core over a (n_name, taxon) presence frame —
     * split out for planted specs. */
@@ -6240,7 +6238,7 @@ object Relational {
     * Scale shape: axes are q31's gated shared machinery; everything
     * here is samples × (P+1) bounded with group-level rollups. */
   def q85EnvfitFactor(spark: SparkSession, dir: String): DataFrame = {
-    val x = SharedBuilds.pcoaAxes(spark, dir)
+    val x = graft.Memo.pcoa.get(spark, dir)
       .select(col("sample").as("n_name"),
         col("axis1").as("x1"), col("axis2").as("x2"))
     val nat = Tables.dim(spark, dir, "nation")

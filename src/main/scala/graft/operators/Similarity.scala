@@ -2183,7 +2183,7 @@ object Similarity {
   /** Output formatting over an already-built (v, u, s) edge frame —
     * split out so the driver can build the index ONCE and reuse it
     * across the s17/s18/s22 entries (the production shape: one build,
-    * many searches; d7/d8's memo pattern). */
+    * many searches; `graft.Memo.ann`). */
   def knnGraphFormat(cur: DataFrame): DataFrame = {
     val wOut = org.apache.spark.sql.expressions.Window
       .partitionBy("v").orderBy(col("s").desc, col("u"))
@@ -2534,8 +2534,8 @@ object Similarity {
   /** The s22 coarse-layer INDEX: NN-Descent over the hash-selected
     * subset, edges mapped back to original ids, checkpointed — the
     * index artifact a production deployment builds once beside the
-    * base graph (r18: memoized in SparkEntry per (session, sf) like
-    * the base s17 edges, so warm searches pay only the search). */
+    * base graph (`graft.Memo.s22Coarse`, owned by s17 like the base
+    * edges, so warm searches pay only the search). */
   def hnswCoarseEdges(e: DataFrame, k: Int = KnnK,
       rounds: Int = KnnRounds): DataFrame = {
     val cmap = coarseMap(e.select(col("vec_id"), col("embedding")))

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Instrumented repro harness for the r5-judge-reported bimodal ~30 s
@@ -32,16 +31,10 @@ object OutlierProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("GRAFT_PROBE_REPS", "20").toInt
     val names = if (args.nonEmpty) args.toSeq
       else Seq("d2_dedup_minhash", "d3_dedup_simhash")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val rec = new StageRecorder
     spark.sparkContext.addSparkListener(rec)
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

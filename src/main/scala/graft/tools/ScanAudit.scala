@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
     val sf = "/root/testdata/sf0.001"
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (q, fn) =>
       try {

@@ -71,7 +71,7 @@ class ContractSpec extends SparkSpec {
         Tables.load(s, d, "region")),
       "boom_probe" -> ((_: SparkSession, _: String) =>
         throw new IllegalStateException("deliberate bench \"failure\""))),
-      reps = 1, countMode = false)
+      reps = 1)
     assert(line.contains(
       """"failed":{"boom_probe":"deliberate bench \"failure\""}"""),
       s"failed map not loud: $line")
@@ -93,7 +93,7 @@ class ContractSpec extends SparkSpec {
         Tables.load(s, d, "region")),
       "boom_probe" -> ((_: SparkSession, _: String) =>
         throw new IllegalStateException("kaboom"))),
-      reps = 1, countMode = false)
+      reps = 1)
     assert(compact.length < 1800, s"headline too long: ${compact.length}")
     assert(compact.startsWith("""{"metric":"total""""), compact)
     assert(compact.contains(""""n_keys":2""") &&
@@ -120,7 +120,7 @@ class ContractSpec extends SparkSpec {
         import s.implicits._
         graft.operators.Graph.g2ComponentsEdges(
           Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("src", "dst"))
-      })), reps = 1, countMode = false)
+      })), reps = 1)
     val steps = graft.operators.Graph.FixpointSteps.getOrDefault("g2_edges", 0L)
     assert(steps > 0, s"no step count recorded: $steps")
     assert(line.contains(s""""fixpoint_steps":{"g2_edges":$steps}"""),
@@ -136,7 +136,7 @@ class ContractSpec extends SparkSpec {
     graft.operators.Graph.FixpointSteps.put("stale_tag_from_last_run", 99L)
     val (line, _) = Bench.benchLine(spark, tinySf, Map(
       "plain_probe" -> ((s: SparkSession, d: String) =>
-        Tables.load(s, d, "region"))), reps = 1, countMode = false)
+        Tables.load(s, d, "region"))), reps = 1)
     assert(!line.contains("stale_tag_from_last_run"),
       s"stale fixpoint tag leaked into artifact: $line")
     assert(line.contains(""""fixpoint_steps":{}"""),
@@ -159,7 +159,7 @@ class ContractSpec extends SparkSpec {
       }),
       "ok_probe" -> ((s: SparkSession, d: String) =>
         Tables.load(s, d, "region"))),
-      reps = 1, countMode = false,
+      reps = 1,
       prior = Map("slow_probe" -> 0.25, "ok_probe" -> 10.0))
     assert(calls.get() == 2,
       s"slow probe should run 1 rep + 1 cross-run rep, ran ${calls.get()}")
@@ -199,7 +199,7 @@ class ContractSpec extends SparkSpec {
         Tables.load(s, d, "documents")
           .repartition(4, col("doc_id"))
           .groupBy("source").agg(cnt(lit(1)).as("n")))),
-      reps = 2, countMode = false)
+      reps = 2)
     val sb = """"shuffle_bytes":\{([^}]*)\}""".r
       .findFirstMatchIn(line).map(_.group(1)).getOrElse("MISSING")
     val scanB = """"scan_probe":\[([0-9-]+),([0-9-]+)\]""".r
@@ -225,7 +225,7 @@ class ContractSpec extends SparkSpec {
       "jitter_probe" -> ((s: SparkSession, d: String) => {
         if (calls.incrementAndGet() == 2) Thread.sleep(1500) // first warm rep
         Tables.load(s, d, "region")
-      })), reps = 3, countMode = false)
+      })), reps = 3)
     assert(calls.get() == 4, s"expected 3 reps + 1 clean-up, ran ${calls.get()}")
     val rawEntry = """"raw":\{"jitter_probe":\[([^\]]*)\]""".r
       .findFirstMatchIn(line).map(_.group(1))

@@ -1046,6 +1046,23 @@ class GraphSpec extends SparkSpec {
       "rounds not recorded")
   }
 
+  test("g28's forest is identical under reliable checkpointing") {
+    // the Borůvka merge runs through Ckpt.stats / Ckpt.statsLazily,
+    // whose reliable-mode path is the eager stats reset
+    val local = SparkEntry.queries("g28_msf")(spark, sfDir)
+      .collect().map(_.toSeq).toSeq
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.conf.set("spark.graft.checkpointDir", ckptDir)
+    try {
+      val reliable = SparkEntry.queries("g28_msf")(spark, sfDir)
+        .collect().map(_.toSeq).toSeq
+      assert(reliable == local, "reliable-checkpoint forest diverges")
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(written > 0, "no checkpoint files written to the reliable dir")
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
   test("g29 single-linkage cuts split the forest at the weakest edges, " +
        "tie-break matches the MSF order, singletons survive") {
     import spark.implicits._
@@ -1087,7 +1104,7 @@ class GraphSpec extends SparkSpec {
        "rebuild, and g28's entry always refreshes the memo (r17 " +
        "verdict #1)") {
     // the registry path: g28's entry builds + memoizes the forest,
-    // g29's entry reuses it (the d7/ann memo pattern) — both must be
+    // g29's entry reuses it (graft.Memo.msf) — both must be
     // row-identical to the memo-free rebuild through g29SingleLinkage
     val g28Rows = SparkEntry.queries("g28_msf")(spark, sfDir).collect()
     val viaMemo = SparkEntry.queries("g29_single_linkage")(spark, sfDir)

@@ -1,48 +1,11 @@
 package graft
 
-import graft.operators.{Ordination, Relational, SharedBuilds}
+import graft.operators.Relational
 
-/** Memo-vs-rebuild identity gates for the r18 shared-build memos
-  * (SharedBuilds.bc / uf / ufLeaves / pcoaAxes) — the same contract
-  * GraphSpec pins for the msf memo: reuse must be observationally
-  * identical to a memo-free rebuild, and each builder registry key's
-  * output must equal the direct API's. */
+/** Consumer-level identity gates over the build memos: derivations
+  * that read a memo must equal their pre-memo shapes. The per-memo
+  * owner/rebuild contract is MemoSpec's. */
 class SharedBuildsSpec extends SparkSpec {
-
-  test("bc memo is frame-identical to a memo-free q30 rebuild, and " +
-       "the q30 entry refreshes it") {
-    val viaEntry = SparkEntry.queries("q30_bray_curtis")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val direct = Relational.q30BrayCurtis(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(viaEntry == direct,
-      "q30's memo-refreshing entry diverged from q30BrayCurtis")
-    val viaMemo = SharedBuilds.bc(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(viaMemo == direct, "memoized bc diverged from the rebuild")
-  }
-
-  test("uf memo is frame-identical to a memo-free q44 rebuild") {
-    val direct = Relational.q44TaxonomyUnifrac(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val viaMemo = SharedBuilds.uf(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(viaMemo == direct, "memoized uf diverged from the rebuild")
-  }
-
-  test("pcoa-axes memo is frame-identical to a memo-free q31 rebuild, " +
-       "and the q31 entry refreshes it") {
-    val direct = Ordination.pcoa(Relational.q30BrayCurtis(spark, sfDir))
-      .collect().map(_.toSeq).toSeq
-    val viaEntry = SparkEntry.queries("q31_pcoa")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(viaEntry == direct,
-      "q31's memo-refreshing entry diverged from the direct pcoa")
-    val viaMemo = SharedBuilds.pcoaAxes(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(viaMemo == direct,
-      "memoized pcoa axes diverged from the rebuild")
-  }
 
   test("memo consumers (q47/q68/q67/q85) are row-identical to the " +
        "pre-memo derivation shapes") {
@@ -50,7 +13,7 @@ class SharedBuildsSpec extends SparkSpec {
     // aggregate; the memo form reads bc + uf. The leaf-rollup bc is
     // bit-identical to q30's direct aggregate (exact DECIMAL sums),
     // so the two forms must agree row-for-row.
-    val leaves = SharedBuilds.ufLeaves(spark, sfDir)
+    val leaves = Memo.ufLeaves.get(spark, sfDir)
     val bcFromLeaves = Relational.brayCurtisFromAbundance(
       leaves.groupBy(org.apache.spark.sql.functions.col("n_name"),
           org.apache.spark.sql.functions.col("p_type"))
