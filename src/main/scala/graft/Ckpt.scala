@@ -68,14 +68,23 @@ object Ckpt {
     * actions"): marks the frame for local checkpointing — the Catalyst
     * plan is truncated to a LogicalRDD immediately, exactly as in
     * [[apply]] — but defers block materialization to the CALLER'S next
-    * action over the frame. Every fixpoint loop here follows
-    * `Ckpt(state)` with a full-scan convergence probe (the exact-sum
-    * aggregate / an edge count), so the probe IS the materializing
-    * action: one job per period instead of a checkpoint job plus a
-    * probe job. Semantics are identical — localCheckpoint persists the
-    * blocks and truncates RDD lineage the first time the partitions
-    * compute, and the probe scans every partition, so nothing is left
-    * unmaterialized behind the returned frame.
+    * action over the frame, so the caller's next action MUST be a full
+    * scan (an aggregate or a count, never isEmpty/take) and the frame
+    * must not be consumed twice before it. A full-scan convergence
+    * probe then IS the materializing action: one job per period
+    * instead of a checkpoint job plus a probe job. Semantics are
+    * identical — localCheckpoint persists the blocks and truncates RDD
+    * lineage the first time the partitions compute, and the probe
+    * scans every partition, so nothing is left unmaterialized behind
+    * the returned frame.
+    *
+    * Callers: the graph family's exact-sum loops all run through ONE
+    * owner, `Graph.fixpoint`, which pairs each mark with its sum probe;
+    * the remaining direct callers each follow the mark with their own
+    * full scan — g28's Borůvka edge contraction (the round-end edge
+    * count), g19's SCC peel (the per-round `remaining` count) and d7's
+    * path-halving propagation (the convergence count or the next
+    * round's eager checkpoint).
     *
     * Reliable-checkpoint mode falls back to the EAGER path:
     * `RDD.checkpoint()` materializes in a SECOND job after the first

@@ -932,7 +932,6 @@ object Dedup {
     var iter = 0
     var converged = false
     try while (!converged && iter < maxIter) {
-      val tIter = System.nanoTime()
       val prop = graft.Ckpt(edges.join(labels, col("src") === col("node"))
         .groupBy(col("dst")).agg(min("label").as("label"))
         .select(col("dst").as("node"), col("label")))
@@ -961,9 +960,6 @@ object Dedup {
           .join(prev.as("o"), col("n.node") === col("o.node"))
           .filter(col("n.label") =!= col("o.label"))
           .count() == 0L
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(f"[cc] iter=$iter converged=$converged " +
-          f"took=${(System.nanoTime() - tIter) / 1e9}%.2f s")
     } finally edges.unpersist(blocking = true)
     // Path halving doubles the propagation distance each round, so the
     // default 25-round budget covers any diameter up to ~2^25 — but a

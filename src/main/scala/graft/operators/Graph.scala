@@ -601,12 +601,8 @@ object Graph {
 
   /** Min-label propagation over nodes(v) + directed edge pairs (both
     * orientations and per-node self-edges are added here), iterated
-    * TO THE FIXPOINT: [[CkptEvery]] lazy steps per period, then one
-    * checkpoint + one exact-sum fixpoint probe. Monotonicity (every label is
-    * non-increasing) makes the across-period comparison sound: if the
-    * state is unchanged over a whole period it was unchanged at every
-    * intermediate step, so the previous checkpoint already was the
-    * fixpoint. Caps at min(maxSteps, n + period) — min-label converges
+    * TO THE FIXPOINT by [[fixpoint]] (labels are non-increasing).
+    * Caps at min(maxSteps, n + period) — min-label converges
     * in ≤ diameter ≤ n-1 steps, so the derived cap only fires on a
     * genuine bug. Pins the undirected adjacency partitioned by src for
     * the per-step join, then RELEASES every pin (plus `release`, the
@@ -627,8 +623,8 @@ object Graph {
       val n = nodes.count()
       val cap = math.min(maxSteps, n + CkptEvery)
       val init = nodes.select(col("v"), col("v").as("label"))
-      val (labels, steps) = propagateToFixpoint(init, und, n, min, cap,
-        s"min-label propagation ($tag)")
+      val (labels, steps) = fixpoint(init, "label", cap, n,
+        s"min-label propagation on $n nodes ($tag)")(labelStep(und, min))
       FixpointSteps.put(tag, steps)
       labels.groupBy(col("label").as("component"))
         .agg(count(lit(1)).as("n_members"), min(col("v")).as("min_doc"),
@@ -640,63 +636,91 @@ object Graph {
     }
   }
 
-  /** Monotone label propagation to the exact fixpoint — the shared
-    * loop behind [[componentsCore]] (min-label CC) and [[sccCore]]'s
-    * coloring/marking passes. `adj` must carry a self-edge per node
-    * (the sentinel that keeps every node in the aggregate and carries
-    * its own label forward) and should be persisted by the caller (it
-    * is re-joined every step); `labels0` is the (v, label) initial
-    * state; `fold` is the per-dst monotone aggregate (min for
-    * coloring, max for marks).
+  /** One min/max label-propagation step for [[componentsCore]] and
+    * [[sccLabelsCore]]'s coloring/marking passes. `adj` must carry a
+    * self-edge per node (the sentinel that keeps every node in the
+    * aggregate and carries its own label forward) and should be
+    * persisted by the caller (it is re-joined every step); `fold` is
+    * the per-dst monotone aggregate (min for coloring, max for marks). */
+  private def labelStep(adj: DataFrame, fold: org.apache.spark.sql.Column =>
+      org.apache.spark.sql.Column)(labels: DataFrame): DataFrame = adj
+    .join(labels, col("src") === col("v"))
+    .groupBy(col("dst"))
+    .agg(fold(col("label")).as("label"))
+    .select(col("dst").as("v"), col("label"))
+
+  /** One min-plus relaxation step over `und(src, dst, w)` for the
+    * (v, keys…, dist) state: dist'(v) = min over incoming (dist(u) + w).
+    * `keys` are extra state columns the fold keeps apart (the pivot
+    * `seed` of the multi-source BFS in [[g11Centrality]] and
+    * [[g16Betweenness]]); the single-source [[wspCore]] passes none. */
+  private def minPlusStep(und: DataFrame, keys: String*)(
+      dist: DataFrame): DataFrame = und
+    .join(dist, col("src") === col("v"))
+    .groupBy(col("dst") +: keys.map(col): _*)
+    .agg(min(col("dist") + col("w")).as("dist"))
+    .select((col("dst").as("v") +: keys.map(col)) :+ col("dist"): _*)
+
+  /** The exact-sum fixpoint driver behind every data-derived graph
+    * loop (g2/g6 components, g5/g7 k-core, g8/g12/g15 shortest paths,
+    * the g11/g16 multi-source BFS, g19's coloring and marking passes,
+    * g20's condensation levels). Runs `step` [[CkptEvery]] times per
+    * period, then marks the state (`mark`, lineage truncation) and
+    * probes its exact value total; stops when a period leaves the
+    * total unchanged. Returns (converged state, steps run).
     *
-    * Fixpoint test via the EXACT value total: labels are per-node
-    * monotone and every node appears every step (the self-edge
-    * sentinel), so the sum is unchanged over a [[CkptEvery]]-step
-    * period iff no label moved — one scan aggregate per period
-    * instead of an n-row self-join. DECIMAL(38,0) keeps it exact at
-    * any n (the worst case n·|label| ≈ 2⁶³·2⁶³ < 10³⁸; an int64 sum
-    * could wrap a genuine change to apparent equality). The runaway
-    * guard bounds steps actually EXECUTED: each period runs at most
-    * cap − steps further relaxations, so a cap below the checkpoint
-    * cadence still fires (r11 ADVICE); equality of the exact sum over
-    * a SHORT final period (k ≥ 1, monotone labels) still certifies
-    * the fixpoint. Returns (converged (v, label) frame, steps run). */
-  private def propagateToFixpoint(labels0: DataFrame, adj: DataFrame,
-      nNodes: Long, fold: org.apache.spark.sql.Column =>
-        org.apache.spark.sql.Column,
-      cap: Long, what: String): (DataFrame, Long) = {
+    * Why the total certifies the fixpoint: the caller guarantees that
+    * `value` is per-row MONOTONE in one direction (labels and
+    * distances non-increasing, h-indices non-increasing, levels
+    * non-decreasing) and that every row survives every step (the
+    * self-edge sentinel or a left join), so the sum is unchanged over
+    * a period iff no value moved — at every intermediate step too, so
+    * the previous mark already was the fixpoint. One scan aggregate
+    * per period instead of an n-row self-join. DECIMAL(38,0) keeps it
+    * exact at any size (the worst case n·|value| ≈ 2⁶³·2⁶³ < 10³⁸; an
+    * int64 sum could wrap a genuine change to apparent equality).
+    *
+    * Runaway guard: `cap` bounds steps actually EXECUTED — each period
+    * runs at most cap − steps steps, and a period with none left fails
+    * loudly with `what`, so a cap below the cadence still fires;
+    * equality over a SHORT final period (k ≥ 1, monotone values) still
+    * certifies. Callers derive the cap from the data so it fires only
+    * on a genuine bug. `size` is the caller's row count: 0 runs no
+    * period (and records 0 steps).
+    *
+    * `mark` defaults to the lazy checkpoint: the probe right after
+    * each mark is a full-scan aggregate, so it materializes the blocks
+    * in the SAME job — one action per period (r19, guide §2.4 fewer
+    * actions). This driver is the one place the graph loops pair the
+    * lazy mark with that probe. k-core passes the eager checkpoint
+    * instead (measured, r19: the fusion cost g5 ~40% — the h-index
+    * agg's expensive merge then runs inside the probe's AQE-coalesced
+    * final stage; the eager checkpoint keeps it on the full reduce
+    * parallelism). */
+  private def fixpoint(init: DataFrame, value: String, cap: Long,
+      size: Long, what: String,
+      mark: DataFrame => DataFrame = graft.Ckpt.lazily)(
+      step: DataFrame => DataFrame): (DataFrame, Long) = {
     def tot(df: DataFrame): java.math.BigDecimal = df
-      .agg(coalesce(sum(col("label").cast("decimal(38,0)")),
+      .agg(coalesce(sum(col(value).cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    // LAZY checkpoints throughout this loop (r19, guide §2.4 "fewer
-    // actions"): the exact-sum probe right after each mark is a
-    // full-scan aggregate, so it materializes the checkpoint blocks in
-    // the SAME job — one action per period instead of two.
-    var labels = graft.Ckpt.lazily(labels0)
-    var curTot = tot(labels)
+    var cur = mark(init)
+    var curTot = tot(cur)
     var steps = 0L
-    var converged = nNodes == 0L
+    var converged = size == 0L
     while (!converged) {
       val k = math.min(CkptEvery.toLong, cap - steps)
-      require(k > 0,
-        s"$what not converged after $steps steps " +
-          s"on $nNodes nodes (cap $cap)")
-      var nxt = labels
-      for (_ <- 1L to k) {
-        nxt = adj
-          .join(nxt, col("src") === col("v"))
-          .groupBy(col("dst"))
-          .agg(fold(col("label")).as("label"))
-          .select(col("dst").as("v"), col("label"))
-      }
+      require(k > 0, s"$what not converged after $steps steps (cap $cap)")
+      var nxt = cur
+      for (_ <- 1L to k) nxt = step(nxt)
       steps += k
-      val nm = graft.Ckpt.lazily(nxt)
+      val nm = mark(nxt)
       val nmTot = tot(nm)
       converged = nmTot.compareTo(curTot) == 0
-      labels = nm
+      cur = nm
       curTot = nmTot
     }
-    (labels, steps)
+    (cur, steps)
   }
 
   /** DuckDB oracle for [[g2Components]] — the same min-label
@@ -804,17 +828,17 @@ object Graph {
   }
 
   /** Iterated h-index over the simple undirected edge set (a, b),
-    * run TO THE FIXPOINT (componentsCore's loop discipline):
-    * [[CkptEvery]] lazy steps per period, then one checkpoint + one
-    * exact-sum fixpoint probe. The h-index sequence is per-node monotone
-    * non-increasing (Lü et al. 2016), so across-period equality
-    * certifies the fixpoint. Derived cap: every unconverged period
-    * strictly decreases the all-integer value total, which starts at
-    * Σdeg = 2|E| — so the loop observes convergence within 2|E|+1
-    * periods; anything past min(maxSteps, that) is a genuine bug and
-    * fails loudly. Message-passing shape is g2's exactly: the edge
-    * set is pinned partitioned by src — the per-step JOIN key — so at
-    * scale the adjacency never moves (only the node-scale value frame
+    * run TO THE FIXPOINT by [[fixpoint]], checkpointed eagerly: the
+    * h-index sequence is per-node monotone non-increasing (Lü et al.
+    * 2016) and every node keeps a row (both orientations pinned).
+    * Derived cap: every unconverged period strictly decreases the
+    * all-integer value total, which starts at Σdeg = 2|E| — so the
+    * loop observes convergence within 2|E|+1 periods, i.e.
+    * (2|E|+1)·[[CkptEvery]] steps; anything past min(maxSteps, that)
+    * is a genuine bug and fails loudly. Message-passing shape is
+    * g2's exactly: the edge set is pinned partitioned by src — the
+    * per-step JOIN key — so at scale the adjacency never moves (only
+    * the node-scale value frame
     * shuffles into the join; locally Spark broadcasts it). Because
     * `und` carries both orientations, "join values on src, fold by
     * dst" computes the same per-node neighbour multiset as the
@@ -846,57 +870,21 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val m2 = und.count() // = 2|E|
-      val capPeriods = m2 + 1
-      def hIndex(frame: DataFrame): DataFrame = frame
-        .groupBy(col("dst"))
-        .agg(graft.GraftFunctions.hIndexAgg(col("cn")).as("c"))
+      val init = und.groupBy(col("dst")).agg(count(lit(1)).as("c"))
         .select(col("dst").as("v"), col("c"))
-
-      var cur = graft.Ckpt(und.groupBy(col("dst")).agg(count(lit(1)).as("c"))
-        .select(col("dst").as("v"), col("c")))
-      // Fixpoint test via the exact value total (componentsCore's
-      // trick): the h-index sequence is per-node monotone
-      // non-increasing and every node keeps a row (both orientations
-      // pinned), so sum-unchanged over a period ⟺ fixpoint — one scan
-      // aggregate per period, no n-row self-join. Values are bounded
-      // by degree, so DECIMAL(38,0) is exact with orders of margin.
-      def tot(df: DataFrame): java.math.BigDecimal = df
-        .agg(coalesce(sum(col("c").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      var curTot = tot(cur)
-      var steps = 0L
-      var periods = 0L
-      var converged = m2 == 0L
-      while (!converged) {
-        // guard bounds steps actually EXECUTED (r11 ADVICE): clamp
-        // the period to maxSteps − steps, fail before running a step
-        // past either cap. A short final period (k ≥ 1) still
-        // certifies the fixpoint — the sequence is monotone.
-        val k = math.min(CkptEvery.toLong, maxSteps - steps)
-        require(k > 0 && periods < capPeriods,
-          s"h-index iteration not converged after $steps steps " +
-            s"(caps: $maxSteps steps, $capPeriods periods)")
-        var nxt = cur
-        for (_ <- 1L to k) {
-          // Tried and REVERTED (r19 #2): SHUFFLE_HASH on the value
-          // side to skip the per-step sort-merge sorts — measured
-          // g7 10.2 → 12.5 s (StageProbe A/B). The per-step cost is
-          // the hIndexAgg histogram merge itself, not the sorts; the
-          // hash build only added per-step work.
-          nxt = hIndex(und.join(
-            nxt.select(col("v").as("src"), col("c").as("cn")), "src"))
-        }
-        steps += k
-        periods += 1
-        // eager (measured, r19): the lazily+probe fusion cost g5 ~40%
-        // — the h-index agg's expensive merge runs inside the probe's
-        // AQE-coalesced final stage; the eager checkpoint keeps it on
-        // the full reduce parallelism
-        val nm = graft.Ckpt(nxt)
-        val nmTot = tot(nm)
-        converged = nmTot.compareTo(curTot) == 0
-        cur = nm
-        curTot = nmTot
+      // Tried and REVERTED (r19 #2): SHUFFLE_HASH on the value side to
+      // skip the per-step sort-merge sorts — measured g7 10.2 → 12.5 s
+      // (StageProbe A/B). The per-step cost is the hIndexAgg histogram
+      // merge itself, not the sorts; the hash build only added
+      // per-step work.
+      val (cur, steps) = fixpoint(init, "c",
+        math.min(maxSteps, (m2 + 1) * CkptEvery), m2,
+        s"h-index iteration on $m2 edge ends ($tag)",
+        mark = graft.Ckpt(_)) { nxt =>
+        und.join(nxt.select(col("v").as("src"), col("c").as("cn")), "src")
+          .groupBy(col("dst"))
+          .agg(graft.GraftFunctions.hIndexAgg(col("cn")).as("c"))
+          .select(col("dst").as("v"), col("c"))
       }
       FixpointSteps.put(tag, steps)
       cur.groupBy(col("c").as("coreness"))
@@ -1276,9 +1264,8 @@ object Graph {
     * hop-distance vector is all-integer and per-node monotone
     * NON-INCREASING (each step takes min(own, min over neighbours+1),
     * the self-edge carrying weight 0 so "own" rides the same
-    * aggregate), so the loop runs to the unique fixpoint with the
-    * exact-sum scan probe and a derived runaway cap (BFS converges in
-    * ≤ diameter ≤ n−1 steps). Unreachable nodes hold the `n` infinity
+    * aggregate), so [[fixpoint]] runs it to the unique fixpoint with
+    * a derived runaway cap (BFS converges in ≤ diameter ≤ n−1 steps). Unreachable nodes hold the `n` infinity
     * sentinel at the fixpoint and are reported as −1.
     *
     * 100 TB contract: the weighted adjacency is pinned partitioned by
@@ -1322,10 +1309,8 @@ object Graph {
     * (dist(u) + w) where real edges carry w = 1 in both orientations
     * and a per-node self-edge carries w = 0 (so the min includes the
     * node's own value — monotone non-increasing by construction, and
-    * the sentinel keeps every node in the aggregate). componentsCore's
-    * loop verbatim: [[CkptEvery]] lazy steps per period, checkpoint +
-    * exact DECIMAL(38,0) sum probe (monotone ⇒ sum-unchanged ⟺
-    * fixpoint), cap n + period. */
+    * the sentinel keeps every node in the aggregate). Runs on
+    * [[fixpoint]], cap n + period. */
   private def bfsCore(nodes: DataFrame, fwd: DataFrame, source: Long,
                       maxSteps: Long, tag: String = "g8_bfs"): DataFrame =
     // hop distance = the unit-weight special case; any real hop
@@ -1336,13 +1321,13 @@ object Graph {
   /** Weighted min-plus relaxation core — Bellman–Ford as the g2/g5
     * fixpoint loop: real edges carry POSITIVE integer weights in both
     * orientations, the per-node weight-0 self-edge keeps "own value"
-    * in the min (monotone non-increasing by construction), and the
-    * loop runs to the unique shortest-distance fixpoint with the
-    * exact-sum probe. Bellman–Ford needs ≤ n−1 full relaxation
-    * rounds REGARDLESS of weights (each round extends every shortest
-    * path by ≥ 1 edge), so the derived cap n + period carries over
-    * from the unit-weight case unchanged. `infOf(n)` must exceed any
-    * real distance — callers pass n for hops, n·maxW for weights. */
+    * in the min (monotone non-increasing by construction), and
+    * [[fixpoint]] runs to the unique shortest-distance fixpoint.
+    * Bellman–Ford needs ≤ n−1 full relaxation rounds REGARDLESS of
+    * weights (each round extends every shortest path by ≥ 1 edge), so
+    * the derived cap n + period carries over from the unit-weight
+    * case unchanged. `infOf(n)` must exceed any real distance —
+    * callers pass n for hops, n·maxW for weights. */
   private def wspCore(nodes: DataFrame, wedges: DataFrame, source: Long,
                       maxSteps: Long, tag: String,
                       infOf: Long => Long): DataFrame = {
@@ -1356,42 +1341,11 @@ object Graph {
     try {
       val n = nodes.count()
       val inf = infOf(n)
-      val cap = math.min(maxSteps, n + CkptEvery)
-      // lazy checkpoints: the exact-sum probe materializes each mark
-      // in its own job (r19, guide §2.4 fewer actions)
-      var dist = graft.Ckpt.lazily(nodes.select(col("v"),
-        when(col("v") === source, lit(0L)).otherwise(lit(inf)).as("dist")))
-      def tot(df: DataFrame): java.math.BigDecimal = df
-        .agg(coalesce(sum(col("dist").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      var curTot = tot(dist)
-      var steps = 0L
-      var converged = n == 0L
-      while (!converged) {
-        // guard bounds steps actually EXECUTED (r11 ADVICE: the old
-        // check only ran at period boundaries, so maxSteps < CkptEvery
-        // still executed a full period and never fired on a
-        // first-period fixpoint). A short final period (k ≥ 1) still
-        // certifies the fixpoint — distances are monotone.
-        val k = math.min(CkptEvery.toLong, cap - steps)
-        require(k > 0,
-          s"BFS relaxation not converged after $steps steps " +
-            s"on $n nodes (cap $cap)")
-        var nxt = dist
-        for (_ <- 1L to k) {
-          nxt = und
-            .join(nxt, col("src") === col("v"))
-            .groupBy(col("dst"))
-            .agg(min(col("dist") + col("w")).as("dist"))
-            .select(col("dst").as("v"), col("dist"))
-        }
-        steps += k
-        val nm = graft.Ckpt.lazily(nxt)
-        val nmTot = tot(nm)
-        converged = nmTot.compareTo(curTot) == 0
-        dist = nm
-        curTot = nmTot
-      }
+      val init = nodes.select(col("v"),
+        when(col("v") === source, lit(0L)).otherwise(lit(inf)).as("dist"))
+      val (dist, steps) = fixpoint(init, "dist",
+        math.min(maxSteps, n + CkptEvery), n,
+        s"BFS relaxation on $n nodes ($tag)")(minPlusStep(und))
       FixpointSteps.put(tag, steps)
       dist.select(col("v"),
         when(col("dist") >= inf, lit(-1L)).otherwise(col("dist")).as("dist"))
@@ -1546,6 +1500,29 @@ object Graph {
         (SELECT unnest(generate_series(1, ni)) AS i FROM nn) t
       ORDER BY v"""
 
+  /** Multi-source BFS behind [[g11Centrality]] and [[g16Betweenness]]:
+    * (v, seed, dist) for the `nSeeds` deterministic pivots — the
+    * smallest (Knuth-hash, id) rank, an S-row frame broadcast into the
+    * init crossJoin — relaxed by [[minPlusStep]] over
+    * `und(src, dst, w)` to the [[fixpoint]] (weight-0 self-edges keep
+    * every pair in the aggregate, per-pair monotone non-increasing),
+    * cap n + period. Unreached pairs keep dist = n. Returns
+    * (state, steps). */
+  private def multiSourceBfs(nodes: DataFrame, und: DataFrame, n: Long,
+      nSeeds: Int, maxSteps: Long, what: String): (DataFrame, Long) = {
+    val seeds = nodes.select(col("v").as("seed"),
+        pmod(pmod(col("v"), lit(1000000000L)) * lit(2654435761L),
+          lit(2147483647L)).as("hk"))
+      .orderBy(col("hk"), col("seed"))
+      .limit(nSeeds)
+      .select(col("seed"))
+    val init = nodes.crossJoin(broadcast(seeds))
+      .select(col("v"), col("seed"),
+        when(col("v") === col("seed"), lit(0L)).otherwise(lit(n)).as("dist"))
+    fixpoint(init, "dist", math.min(maxSteps, n + CkptEvery), n,
+      s"$what on $n nodes × $nSeeds seeds")(minPlusStep(und, "seed"))
+  }
+
   /** g11: harmonic centrality from SAMPLED sources (the
     * Eppstein–Wang estimator family) — per node, Σ 1/d(s, v) over a
     * fixed set of [[G11Seeds]] pivot nodes, the "how close is this
@@ -1557,13 +1534,11 @@ object Graph {
     * by id) — pseudo-random spread, bit-reproducible in both engines,
     * no rand().
     *
-    * Iteration: ONE multi-source BFS — state is (node, seed, dist),
-    * S× the g8 frame, relaxed by the same min-plus step (weight-0
-    * self-edges keep every pair in the aggregate, per-pair monotone
-    * non-increasing ⇒ the exact-sum probe certifies the fixpoint; cap
-    * n + period). Cost: one (edge×S)-scale exchange per step — S
-    * single-source BFS runs would pay the same total exchanges but
-    * S× the scheduling and S separate adjacency passes.
+    * Iteration: ONE [[multiSourceBfs]] — state is (node, seed, dist),
+    * S× the g8 frame, relaxed by g8's min-plus step. Cost: one
+    * (edge×S)-scale exchange per step — S single-source BFS runs
+    * would pay the same total exchanges but S× the scheduling and S
+    * separate adjacency passes.
     *
     * Determinism of the final fold: each 1/d contribution is rounded
     * to 12 decimals and summed as DECIMAL(38,12) — exact and
@@ -1596,48 +1571,9 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       und.count()
-      // deterministic pivots: smallest (knuth-hash, id) rank — an
-      // S-row frame, broadcast into the init crossJoin
-      val seeds = nodes.select(col("v").as("seed"),
-          pmod(pmod(col("v"), lit(1000000000L)) * lit(2654435761L),
-            lit(2147483647L)).as("hk"))
-        .orderBy(col("hk"), col("seed"))
-        .limit(nSeeds)
-        .select(col("seed"))
       val inf = n
-      val cap = math.min(maxSteps, n + CkptEvery)
-      // lazy checkpoints: the exact-sum probe materializes each mark
-      // in its own job (r19, guide §2.4 fewer actions)
-      var dist = graft.Ckpt.lazily(nodes.crossJoin(broadcast(seeds))
-        .select(col("v"), col("seed"),
-          when(col("v") === col("seed"), lit(0L)).otherwise(lit(inf))
-            .as("dist")))
-      def tot(df: DataFrame): java.math.BigDecimal = df
-        .agg(coalesce(sum(col("dist").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      var curTot = tot(dist)
-      var steps = 0L
-      var converged = n == 0L
-      while (!converged) {
-        val k = math.min(CkptEvery.toLong, cap - steps)
-        require(k > 0,
-          s"multi-source BFS not converged after $steps steps " +
-            s"on $n nodes × $nSeeds seeds (cap $cap)")
-        var nxt = dist
-        for (_ <- 1L to k) {
-          nxt = und
-            .join(nxt, col("src") === col("v"))
-            .groupBy(col("dst"), col("seed"))
-            .agg(min(col("dist") + col("w")).as("dist"))
-            .select(col("dst").as("v"), col("seed"), col("dist"))
-        }
-        steps += k
-        val nm = graft.Ckpt.lazily(nxt)
-        val nmTot = tot(nm)
-        converged = nmTot.compareTo(curTot) == 0
-        dist = nm
-        curTot = nmTot
-      }
+      val (dist, steps) = multiSourceBfs(nodes, und, n, nSeeds, maxSteps,
+        "multi-source BFS")
       FixpointSteps.put("g11_centrality", steps)
       val contrib = dist
         .filter(col("dist") > 0 && col("dist") < inf)
@@ -2124,9 +2060,8 @@ object Graph {
     *
     * Three phases, all on the (v, seed) keyed state so every pivot
     * rides ONE shared exchange per step (never S separate BFS runs):
-    * (1) multi-source BFS distances — g11's exact-integer fixpoint
-    * (weight-0 self-edges, exact-sum probe, derived cap, steps
-    * recorded); (2) path counts sigma, level-synchronous: sigma(v) =
+    * (1) multi-source BFS distances — g11's [[multiSourceBfs]]
+    * (steps recorded); (2) path counts sigma, level-synchronous: sigma(v) =
     * Σ sigma(u) over edge-predecessors one level nearer the pivot —
     * a driver loop over BFS levels (bounded by the graph's
     * eccentricity, the quantity g15 measures), each step one
@@ -2171,48 +2106,10 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       undSelf.count()
-      val seeds = nodes.select(col("v").as("seed"),
-          pmod(pmod(col("v"), lit(1000000000L)) * lit(2654435761L),
-            lit(2147483647L)).as("hk"))
-        .orderBy(col("hk"), col("seed"))
-        .limit(nSeeds)
-        .select(col("seed"))
       val inf = n
-      val cap = math.min(maxSteps, n + CkptEvery)
       // ---- phase 1: multi-source BFS distances (g11's fixpoint) ----
-      // lazy checkpoints: the exact-sum probe materializes each mark
-      // in its own job (r19, guide §2.4 fewer actions)
-      var dist = graft.Ckpt.lazily(nodes.crossJoin(broadcast(seeds))
-        .select(col("v"), col("seed"),
-          when(col("v") === col("seed"), lit(0L)).otherwise(lit(inf))
-            .as("dist")))
-      def tot(df: DataFrame): java.math.BigDecimal = df
-        .agg(coalesce(sum(col("dist").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-      var curTot = tot(dist)
-      var steps = 0L
-      var converged = n == 0L
-      while (!converged) {
-        val k = math.min(CkptEvery.toLong, cap - steps)
-        require(k > 0,
-          s"g16 BFS not converged after $steps steps " +
-            s"on $n nodes × $nSeeds seeds (cap $cap)")
-        var nxt = dist
-        for (_ <- 1L to k) {
-          nxt = undSelf
-            .join(nxt, col("src") === col("v"))
-            .groupBy(col("dst"), col("seed"))
-            .agg(min(col("dist") + col("w")).as("dist"))
-            .select(col("dst").as("v"), col("seed"), col("dist"))
-        }
-        steps += k
-        val nm = graft.Ckpt.lazily(nxt)
-        val nmTot = tot(nm)
-        converged = nmTot.compareTo(curTot) == 0
-        dist = nm
-        curTot = nmTot
-      }
-      val distF = dist
+      val (distF, steps) = multiSourceBfs(nodes, undSelf, n, nSeeds,
+        maxSteps, "g16 BFS")
       // highest populated BFS level — a one-row planning scalar that
       // bounds both the forward and backward level loops
       val maxLev = Option(distF.filter(col("dist") < inf)
@@ -3413,8 +3310,8 @@ object Graph {
     *       c(w) = r exactly);
     *   (3) every marked set IS the SCC of its root (F ∩ B) — emit
     *       them ALL, peel, repeat on the remainder.
-    * Both inner loops are [[propagateToFixpoint]] (componentsCore's
-    * exact-sum probe, Ckpt cadence, loud runaway caps); the outer
+    * Both inner loops are [[labelStep]] runs on [[fixpoint]] (exact-sum
+    * probe, Ckpt cadence, loud runaway caps); the outer
     * peel is capped by `maxRounds` (default n + 1 — a pure runaway
     * guard: each round removes ≥ 1 node). Every round removes every
     * root SCC simultaneously, so round count is bounded by the depth
@@ -3489,9 +3386,10 @@ object Graph {
         .unionByName(remaining.select(col("v").as("src"), col("v").as("dst")))
         .repartition(col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val (colors, cSteps) = propagateToFixpoint(
-        remaining.select(col("v"), col("v").as("label")), fadj, nLeft,
-        min, nLeft + CkptEvery, s"SCC coloring ($tag)")
+      val (colors, cSteps) = fixpoint(
+        remaining.select(col("v"), col("v").as("label")), "label",
+        nLeft + CkptEvery, nLeft, s"SCC coloring on $nLeft nodes ($tag)")(
+        labelStep(fadj, min))
       fadj.unpersist(blocking = true)
       // (2) backward marks within color classes: keep only same-color
       // edges, REVERSED (marks flow head → tail), plus the sentinel
@@ -3506,8 +3404,8 @@ object Graph {
         .persist(StorageLevel.MEMORY_AND_DISK)
       val seed = colors.select(col("v"),
         when(col("label") === col("v"), 1L).otherwise(0L).as("label"))
-      val (marks, mSteps) = propagateToFixpoint(seed, badj, nLeft,
-        max, nLeft + CkptEvery, s"SCC marking ($tag)")
+      val (marks, mSteps) = fixpoint(seed, "label", nLeft + CkptEvery,
+        nLeft, s"SCC marking on $nLeft nodes ($tag)")(labelStep(badj, max))
       badj.unpersist(blocking = true)
       innerSteps += cSteps + mSteps
       // (3) peel every root SCC at once
@@ -3575,9 +3473,9 @@ object Graph {
     * label-join + distinct of the edge list; the level ladder is the
     * standard monotone fixpoint lvl(c) = max(lvl(c), 1 + max over
     * predecessors), which converges in ≤ condensation-depth steps
-    * (after k steps every SCC of depth ≤ k is final). The exact-sum
-    * probe certifies the fixpoint (levels are monotone non-decreasing
-    * integers bounded by C − 1); the loud cap is C + 1 steps — past
+    * (after k steps every SCC of depth ≤ k is final). [[fixpoint]]
+    * certifies it (levels are monotone non-decreasing integers
+    * bounded by C − 1); the loud cap is C + 1 steps — past
     * that is a genuine bug (a cycle in the "DAG" = a broken SCC
     * contraction).
     *
@@ -3626,39 +3524,20 @@ object Graph {
     val cnodes = graft.Ckpt(labels.groupBy(col("component"))
       .agg(count(lit(1)).as("n_members")))
     val nC = cnodes.count()
-    def tot(df: DataFrame): java.math.BigDecimal = df
-      .agg(coalesce(sum(col("lvl").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    // lazy checkpoints: the exact-sum probe materializes each mark in
-    // its own job (r19, guide §2.4 fewer actions)
-    var lvl = graft.Ckpt.lazily(cnodes.select(col("component").as("c"),
-      lit(0L).as("lvl")))
-    var curTot = tot(lvl)
-    var steps = 0L
-    var converged = nC == 0L
-    while (!converged) {
-      val k = math.min(CkptEvery.toLong, nC + 1 - steps)
-      require(k > 0,
-        s"condensation levels not converged after $steps steps on " +
-          s"$nC SCCs ($tag) — the contraction left a cycle")
-      var nxt = lvl
-      for (_ <- 1L to k) {
-        val fromPreds = cedges
-          .join(nxt.select(col("c").as("csrc"), col("lvl").as("plvl")),
-            "csrc")
-          .groupBy(col("cdst"))
-          .agg((max(col("plvl")) + 1L).as("cand"))
-          .select(col("cdst").as("c"), col("cand"))
-        nxt = nxt.join(fromPreds, Seq("c"), "left")
-          .select(col("c"),
-            greatest(col("lvl"), coalesce(col("cand"), lit(0L))).as("lvl"))
-      }
-      steps += k
-      val nm = graft.Ckpt.lazily(nxt)
-      val nmTot = tot(nm)
-      converged = nmTot.compareTo(curTot) == 0
-      lvl = nm
-      curTot = nmTot
+    // levels never exceed C − 1, so C + 1 steps is the loud cap: past
+    // it the contraction left a cycle
+    val (lvl, steps) = fixpoint(cnodes.select(col("component").as("c"),
+      lit(0L).as("lvl")), "lvl", nC + 1, nC,
+      s"condensation levels on $nC SCCs ($tag)") { cur =>
+      val fromPreds = cedges
+        .join(cur.select(col("c").as("csrc"), col("lvl").as("plvl")),
+          "csrc")
+        .groupBy(col("cdst"))
+        .agg((max(col("plvl")) + 1L).as("cand"))
+        .select(col("cdst").as("c"), col("cand"))
+      cur.join(fromPreds, Seq("c"), "left")
+        .select(col("c"),
+          greatest(col("lvl"), coalesce(col("cand"), lit(0L))).as("lvl"))
     }
     FixpointSteps.put(tag, steps)
     lvl.join(cnodes, col("c") === col("component"))

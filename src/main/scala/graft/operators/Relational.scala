@@ -1822,7 +1822,8 @@ object Relational {
     * Scale shape: q47's exactly — one checkpointed fact-scale BC
     * derivation; env frame dimension-bounded; pairs, the class frame,
     * and the (P+1) lattice all sample-dim-bounded; the class ladder a
-    * C-row broadcast. */
+    * C-row frame (the preserved side of the outer joins, so it is
+    * never the broadcast build side). */
   def q87MantelCorrelog(spark: SparkSession, dir: String): DataFrame = {
     val bcp = graft.Memo.bc.get(spark, dir)
       .select(col("sample_a"), col("sample_b"),
@@ -1903,7 +1904,7 @@ object Relational {
       .agg(count(lit(1)).as("n_perms"),
         sum(when(col("rq") >= col("r_obs"), 1L).otherwise(0L)).as("n_ge"))
     val ladder = (0 until C).map(_.toLong).toDF("cls")
-    broadcast(ladder).join(robs, Seq("cls"), "left_outer")
+    ladder.join(robs, Seq("cls"), "left_outer")
       .join(tails, Seq("cls"), "left_outer")
       .crossJoin(broadcast(bounds))
       .select(col("cls").as("dist_class"),

@@ -301,7 +301,7 @@ class ContractSpec extends SparkSpec {
         ".crossJoin(broadcast(tot)) // one row — in-plan, not a head()" -> "one-row",
         ".crossJoin(broadcast(nCapped)) // one row — in-plan, not a head()" -> "one-row (cap audit count)",
         ".crossJoin(broadcast(m))" -> "one-row (edge count)",
-        "var dist = graft.Ckpt.lazily(nodes.crossJoin(broadcast(seeds))" -> "k (4 deterministic pivots)",
+        "val init = nodes.crossJoin(broadcast(seeds))" -> "k (4 deterministic pivots)",
         ".crossJoin(broadcast( // one-row frame (ContractSpec class)" -> "one-row (mutual-link count)",
         ".crossJoin(broadcast(raw.agg(max(col(\"s\")).as(\"mx\")))) // one row" -> "one-row (g23 half-step max)",
         "m.crossJoin(broadcast(within)) // one-row within census (g26)" -> "one-row (g26 within census)",
@@ -356,7 +356,6 @@ class ContractSpec extends SparkSpec {
         "val cls = graft.Ckpt(zd.crossJoin(broadcast(bounds))" -> "one-row (distance bounds — q87)",
         ".crossJoin(broadcast(bounds))" -> "one-row (distance bounds — q87)",
         "val rk = sk.join(broadcast(mk), \"cls\").crossJoin(broadcast(gm))" -> "k (class censuses + one-row moments — q87)",
-        "broadcast(ladder).join(robs, Seq(\"cls\"), \"left_outer\")" -> "k (4-row class ladder — q87)",
         ".crossJoin(broadcast(pool)) // one-row taxon-pool size" -> "one-row (q60 pool size)",
         ".crossJoin(broadcast(poolRich)) // one-row pooled richness" -> "one-row (q63 pooled richness)",
         ".crossJoin(broadcast(pairSums)) // one-row pair-census sums" -> "one-row (q63 pair sums)",

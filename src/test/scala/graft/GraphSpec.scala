@@ -1529,4 +1529,100 @@ class GraphSpec extends SparkSpec {
     assert(sf.nonEmpty)
     sf.foreach { r => assert(r.getDouble(3) >= 1.0, r.toString) }
   }
+
+  /** Jobs started while `body` runs. The listener bus is drained
+    * through BusShim before the count is read, so a job-start event
+    * still queued when the action returns is not missed. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftshim.BusShim.flushListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftshim.BusShim.flushListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("fixpoint loops keep their job budget and step counts") {
+    import spark.implicits._
+    // the 40-node path (diameter 39); g12 adds weights 1..3, g19 takes
+    // both orientations (one 40-node SCC), g20 the path directed from
+    // 39 down to 0 (40 singleton SCCs on one 39-level chain)
+    val path = (0L until 39L).map(i => (i, i + 1))
+    val und = path.toDF("src", "dst")
+    val docs = (0L until 64L).toDF("doc_id")
+    // (tag, jobs at most, fixpoint steps, run). The budgets are the
+    // job counts of the loops before they shared one driver. g20's
+    // count varies 242–245 from run to run, before and after (AQE
+    // stage scheduling in the condensation joins), so its budget is
+    // the highest of 14 runs before.
+    val pins: Seq[(String, Int, Long, () => Unit)] = Seq(
+      ("g2_edges", 125, 42L,
+        () => Graph.g2ComponentsEdges(und).collect()),
+      ("g5_edges", 83, 24L,
+        () => Graph.g5KcoreEdges(und).collect()),
+      ("g8_edges", 128, 42L,
+        () => Graph.g8BfsEdges(und, 0L).collect()),
+      ("g12_edges", 130, 42L,
+        () => Graph.g12WspEdges(path.map { case (a, b) => (a, b, 1 + a % 3) }
+          .toDF("src", "dst", "w"), 0L).collect()),
+      ("g19_edges", 257, 84L,
+        () => Graph.g19SccEdges((path ++ path.map(_.swap))
+          .toDF("src", "dst")).collect()),
+      ("g20_edges", 245, 41L,
+        () => Graph.g20CondensationEdges(path.map(_.swap)
+          .toDF("src", "dst")).collect()),
+      ("g11_centrality", 42, 9L,
+        () => Graph.g11Centrality(docs).collect()),
+      ("g16_betweenness", 96, 17L,
+        () => Graph.g16Betweenness(docs).collect()))
+    pins.foreach { case (tag, budget, steps, run) =>
+      run() // warm: codegen and broadcast reuse settle
+      val jobs = jobsOf(run())
+      assert(jobs <= budget, s"$tag ran $jobs jobs, budget $budget")
+      assert(Graph.FixpointSteps.get(tag) == steps, tag)
+    }
+  }
+
+  test("fixpoint loops take an empty edge list: empty result, no " +
+       "steps, no pinned frame") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val before = memPinnedIds
+    val comps = "component,n_members,min_doc,max_doc"
+    val cases: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        ("g2_edges", comps, () => Graph.g2ComponentsEdges(empty)),
+        ("g5_edges", "coreness,n_nodes,min_doc,max_doc",
+          () => Graph.g5KcoreEdges(empty)),
+        ("g19_edges", comps, () => Graph.g19SccEdges(empty)),
+        ("g20_edges", "level,n_sccs,n_nodes,min_comp,max_comp",
+          () => Graph.g20CondensationEdges(empty)))
+    cases.foreach { case (tag, cols, run) =>
+      Graph.FixpointSteps.put(tag, -1L)
+      val res = run()
+      assert(res.columns.mkString(",") == cols, tag)
+      assert(res.schema.forall(_.dataType ==
+        org.apache.spark.sql.types.LongType), s"$tag: ${res.schema}")
+      assert(res.collect().isEmpty, tag)
+      assert(Graph.FixpointSteps.get(tag) == 0L, tag)
+    }
+    // a BFS source cannot be a node of an empty graph: both entries
+    // refuse loudly and typed, before any fixpoint state is built
+    val e8 = intercept[IllegalArgumentException](
+      Graph.g8BfsEdges(empty, 0L).collect())
+    assert(e8.getMessage.contains("not a node"), e8.getMessage)
+    val e12 = intercept[IllegalArgumentException](Graph.g12WspEdges(
+      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w"), 0L).collect())
+    assert(e12.getMessage.contains("non-empty"), e12.getMessage)
+    val leaked = memPinnedIds -- before
+    assert(leaked.isEmpty, s"empty-input runs left pinned RDDs: $leaked")
+  }
 }
