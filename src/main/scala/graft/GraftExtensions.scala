@@ -6,18 +6,39 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
-/** Session extension registering graft's native Catalyst expressions.
-  * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * or `.withExtensions(new GraftExtensions)`; operators also call
-  * [[GraftFunctions.ensureRegistered]] so they work on any session.
+/** Session extension registering graft's native Catalyst expressions
+  * and the TopK planner strategy, and sizing Spark's codegen cache.
+  * Activate with `.withExtensions(new GraftExtensions)`; operators also
+  * call [[GraftFunctions.ensureRegistered]] so they work on any session.
+  *
+  * Every generated class goes through one JVM-wide LRU that
+  * `CodeGenerator` sizes once, on first use, from the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100). A pipeline pass
+  * meets its 219–252 classes in the same order every pass, so at 100
+  * entries each is evicted before its next use. `apply` sets the
+  * system property to [[GraftExtensions.CodegenCacheEntries]] when it
+  * is unset: `withExtensions` runs `apply` before `getOrCreate` builds
+  * its `SparkConf` from the `spark.*` system properties, and a value
+  * set by the user (`-D`, `--conf`, builder `.config`) wins. Through
+  * the `spark.sql.extensions` conf `apply` runs after the
+  * `SparkContext` exists, too late for the cache.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    sys.props.getOrElseUpdate(GraftExtensions.CodegenCacheConf,
+      GraftExtensions.CodegenCacheEntries.toString)
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
   }
+}
+
+object GraftExtensions {
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+  /** At least 4× the largest measured working set (252 classes in one
+    * corpus_pipeline pass). */
+  val CodegenCacheEntries = 1000
 }
 
 object GraftFunctions {
@@ -57,8 +78,10 @@ object GraftFunctions {
       }))
 
   /** Idempotently register the native functions and planner strategy
-    * on a live session (covers sessions built without the extensions
-    * conf). */
+    * on a live session (covers sessions built without the extension).
+    * The planner's strategy list holds both the injected and the
+    * experimental strategies, so an extension-built session gets no
+    * second copy. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, info, builder) =>
@@ -66,7 +89,7 @@ object GraftFunctions {
       if (!registry.functionExists(id))
         registry.registerFunction(id, info, builder)
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.TopKPerGroupStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
   }

@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftshim.BusShim
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Stage-level wall profile for registry keys — the no-UI stand-in
@@ -14,12 +16,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * Bench). Per key: one cold rep (codegen + JIT, discarded), then
   * `reps` warm reps, each printed as one summary line — wall seconds
   * next to where the time went: job count, summed stage wall, summed
-  * executor task run time, task JVM-GC time, driver GC time and the
-  * slowest stage. A rep whose wall far exceeds its stage wall is a
-  * DRIVER/scheduling stall (checkpointing, broadcast, cleaner); a
-  * task-GC spike is executor-heap pressure; a slow single stage is a
-  * plan/skew problem. The last warm rep's stages follow, one line
-  * each with duration, task count, and shuffle and input bytes. */
+  * executor task run time, task JVM-GC time, driver GC time, the
+  * slowest stage, and the classes codegen compiled and its seconds
+  * (0 on a warm rep that reuses all its generated code). A rep whose
+  * wall far exceeds its stage wall is a DRIVER/scheduling stall
+  * (checkpointing, broadcast, cleaner); a task-GC spike is
+  * executor-heap pressure; a slow single stage is a plan/skew problem.
+  * The last warm rep's stages follow, one line each with duration,
+  * task count, and shuffle and input bytes. */
 object StageProbe {
   private case class Stage(name: String, wallMs: Long, tasks: Int,
       runMs: Long, gcMs: Long, sRead: Long, sWrite: Long, input: Long)
@@ -73,11 +77,15 @@ object StageProbe {
         rec.stages.clear()
         rec.jobs.set(0)
         val g0 = driverGcMs
+        val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compile0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         run()
         val wall = (System.nanoTime() - t0) / 1e9
         BusShim.flushListeners(sc)
         val dgc = (driverGcMs - g0) / 1e3
+        val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+        val compile = (CodeGenerator.compileTime - compile0) / 1e9
         last = rec.stages.asScala.toSeq
         val slowest = if (last.isEmpty) Stage("-", 0L, 0, 0L, 0L, 0L, 0L, 0L)
           else last.maxBy(_.wallMs)
@@ -86,7 +94,7 @@ object StageProbe {
           f"taskRun=${last.map(_.runMs).sum / 1e3}%7.2f " +
           f"taskGc=${last.map(_.gcMs).sum / 1e3}%6.2f driverGc=$dgc%6.2f " +
           f"slowestStage=${slowest.name.takeWhile(_ != ' ')}@${slowest.wallMs / 1e3}%.2fs " +
-          f"nStages=${last.size}")
+          f"nStages=${last.size} classes=$classes%4d compile=$compile%6.2f")
       }
       last.foreach { s =>
         println(f"[probe] ${s.wallMs}%6d ms  tasks=${s.tasks}%4d  " +

@@ -19,16 +19,18 @@ object Ingest {
   def readCsv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = true): (DataFrame, DataFrame) = {
     val withCorrupt = schema.add("_corrupt_record", "string")
-    val raw = spark.read
+    // PERMISSIVE corrupt-column semantics require materializing once;
+    // a DISK_ONLY checkpoint (not MEMORY) so a 100 TB backfill spills
+    // instead of thrashing executor memory — the trade is one extra
+    // local read. Not `persist`: a cached entry stays in the
+    // CacheManager for the session's life, and every later write to
+    // `path` re-plans it (new generated classes on every re-ingest).
+    val raw = graft.Ckpt(spark.read
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(withCorrupt)
-      .csv(path)
-      // PERMISSIVE corrupt-column semantics require materializing once;
-      // DISK_ONLY (not MEMORY) so a 100 TB backfill spills instead of
-      // thrashing executor memory — the trade is one extra local read.
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .csv(path))
     val good = raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     val bad = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"))

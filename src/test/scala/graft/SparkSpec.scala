@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs, built through
+  * [[GraftExtensions]] like every graft main, so specs see the
+  * production function and strategy registration and codegen cache
+  * size. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
@@ -20,6 +23,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -45,6 +45,12 @@ class TopKSpec extends SparkSpec {
     assert(out.count() == rev.count())
   }
 
+  test("an extension-built session plans with one TopK strategy") {
+    TopK.perGroup(rev, Seq("p_type"), Seq(("qty", false)), 2)
+    assert(spark.sessionState.planner.strategies
+      .count(_ == graft.plans.TopKPerGroupStrategy) == 1)
+  }
+
   test("rejects unknown columns and non-positive k") {
     intercept[IllegalArgumentException] {
       TopK.perGroup(rev, Seq("nope"), Seq(("qty", false)), 3)

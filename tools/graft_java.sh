@@ -4,6 +4,8 @@
 # Needs `sbt compile` first and SPARK_HOME pointing at the Spark install
 # whose jars the build compiles against. The --add-opens flags are the
 # ones Spark needs on JDK 17 outside spark-submit (as in build.sbt).
+# Heap: SPARK_DRIVER_MEM (as build.sbt reads it), else half of the
+# machine's memory clamped to 2-8g.
 set -e
 ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CP="$ROOT/target/scala-2.13/classes:$(ls "${SPARK_HOME:?set SPARK_HOME to the Spark install}"/jars/*.jar | tr '\n' ':')"
@@ -14,4 +16,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
     sun.util.calendar; do
   OPENS+=("--add-opens=java.base/$p=ALL-UNNAMED")
 done
-exec java -Xmx48g "${OPENS[@]}" -cp "$CP" "$@"
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+exec java "-Xmx$MEM" "${OPENS[@]}" -cp "$CP" "$@"
