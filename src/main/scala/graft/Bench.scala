@@ -37,10 +37,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * seconds are rounded to 3 decimals to keep the whole primary
   * section inside a ~2 KB window.
   *
-  * Plan-shape telemetry (r12 verdict #6): `shuffle_bytes` maps each
-  * key to `[bytesRead, bytesWritten]` from the SAME warm rep whose
-  * time is reported — deterministic per plan, so a lost broadcast or
-  * a new exchange shows as a byte diff even when wall time is noise.
+  * Plan-shape telemetry (r12 verdict #6): each rep is one
+  * [[Meter.measure]] interval. `shuffle_bytes` maps each key to
+  * `[bytesRead, bytesWritten]` and `fixpoint_steps` maps each key that
+  * ran an iterative loop to `{tag: steps}`, both from the SAME warm rep
+  * whose time is reported — deterministic per plan, so a lost
+  * broadcast, a new exchange or extra steps show as a diff even when
+  * wall time is noise.
   * Cross-run gate (r12 verdict #4): keys whose reported min exceeds
   * [[CrossRunGate]]× their value in the newest committed BENCH_LOCAL
   * artifact get one extra end-of-suite rep and, if still slow, land
@@ -93,12 +96,6 @@ object Bench {
       queries: Map[String, (SparkSession, String) => DataFrame],
       reps: Int,
       prior: Map[String, Double] = Map.empty): (String, String) = {
-    // FixpointSteps is a process-global map: without this clear, a
-    // bench artifact in a JVM that ran other queries first (specs, a
-    // previous benchLine) would carry stale step tags attributed to
-    // THIS run (r12 ADVICE). Snapshot-free: clear, then emit whatever
-    // this run's queries record.
-    graft.operators.Graph.FixpointSteps.clear()
     // A rep that throws must not masquerade as a (fast) timing — r9
     // benched five analysis-broken queries as the wall time of their
     // exception. Track the FIRST failure message per query; failures
@@ -118,26 +115,20 @@ object Bench {
       df.write.mode("overwrite").format("noop").save()
 
     val names = queries.keys.toSeq.sorted
-    // Shuffle meter (r12 verdict #6): wall time on a shared box is
-    // noisy, shuffle bytes are a deterministic property of the
-    // executed plan — recording them per key makes a plan regression
-    // (lost broadcast, new exchange, extra fixpoint steps) visible in
-    // the artifact even under load. Each rep runs between two flushed
-    // snapshots, so deltas attribute to the query that just ran.
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
-    // one rep = (wall seconds, shuffle bytes read, written)
-    def rep(name: String): (Double, Long, Long) = {
-      val (r0, w0) = meter.snapshot(spark.sparkContext)
-      val t = time(name)(noopWrite(queries(name)(spark, sfDir)))
-      val (r1, w1) = meter.snapshot(spark.sparkContext)
-      (t, r1 - r0, w1 - w0)
-    }
+    // one rep = (wall seconds, its Meter reading): wall time on a shared
+    // box is noisy, shuffle bytes and fixpoint steps are deterministic
+    // properties of the executed plan (r12 verdict #6), so a lost
+    // broadcast, a new exchange or extra steps show in the artifact
+    // even under load. Each rep is its own measured interval, so
+    // nothing one query does is attributed to another.
+    type Rep = (Double, Meter.Reading)
+    def rep(name: String): Rep =
+      Meter.measure(spark)(time(name)(noopWrite(queries(name)(spark, sfDir))))
     // rep 1 = cold (plan codegen + JIT), discarded; reported value =
     // min of the warm reps. Raw times for ALL reps go in the artifact.
     // A query whose first rep throws is not re-run (same exception 3×
     // would just triple the noise); its raw entry is [-1].
-    val rawTimes0: Seq[(String, Seq[(Double, Long, Long)])] =
+    val rawTimes0: Seq[(String, Seq[Rep])] =
       names.map { name =>
         val first = rep(name)
         val rest = if (first._1 < 0) Nil else Seq.fill(reps - 1)(rep(name))
@@ -151,7 +142,7 @@ object Bench {
     // min-of-warm picks the clean number. The extra rep is visible in
     // the raw array (length reps+1), so the artifact still shows the
     // pollution instead of hiding it.
-    val rawTimes1: Seq[(String, Seq[(Double, Long, Long)])] =
+    val rawTimes1: Seq[(String, Seq[Rep])] =
       rawTimes0.map { case (name, ts) =>
         val warm = (if (ts.size > 1) ts.drop(1) else ts).map(_._1).filter(_ >= 0)
         val spread = warm.nonEmpty && warm.min > 0 && warm.max / warm.min > SpreadGate
@@ -164,9 +155,9 @@ object Bench {
     // cold rep to discard, so the lone time IS the reported time.
     // Failed queries (raw [-1]) report -1 — visibly broken, and they
     // do NOT contribute to the suite total.
-    def warmOf(ts: Seq[(Double, Long, Long)]): Seq[(Double, Long, Long)] =
+    def warmOf(ts: Seq[Rep]): Seq[Rep] =
       (if (ts.size > 1) ts.drop(1) else ts).filter(_._1 >= 0)
-    def minWarm(ts: Seq[(Double, Long, Long)]): Double = {
+    def minWarm(ts: Seq[Rep]): Double = {
       val warm = warmOf(ts)
       if (warm.isEmpty) -1.0 else warm.map(_._1).min
     }
@@ -178,7 +169,7 @@ object Bench {
     // if still above the gate, the key lands in the artifact's
     // `suspect` map — the jump is flagged as load, not silently
     // recorded as a code regression.
-    val rawTimes: Seq[(String, Seq[(Double, Long, Long)])] =
+    val rawTimes: Seq[(String, Seq[Rep])] =
       rawTimes1.map { case (name, ts) =>
         val v = minWarm(ts)
         val p = prior.getOrElse(name, -1.0)
@@ -188,14 +179,11 @@ object Bench {
           name -> (ts :+ rep(name))
         } else name -> ts
       }
-    spark.sparkContext.removeSparkListener(meter)
     val matTimes = rawTimes.map { case (n, ts) => n -> minWarm(ts) }
-    // shuffle bytes of the SAME warm rep whose time is reported — the
-    // clean rep's plan is the one the number describes
-    val shuffleBytes = rawTimes.map { case (n, ts) =>
-      val warm = warmOf(ts)
-      if (warm.isEmpty) n -> (-1L, -1L)
-      else { val best = warm.minBy(_._1); n -> (best._2, best._3) }
+    // shuffle bytes and steps of the SAME warm rep whose time is
+    // reported — the clean rep's plan is the one the numbers describe
+    val reported = rawTimes.map { case (n, ts) =>
+      n -> warmOf(ts).minByOption(_._1).map(_._2)
     }
     val suspect = matTimes.filter { case (n, v) =>
       val p = prior.getOrElse(n, -1.0)
@@ -206,7 +194,7 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jmap(ts: Seq[(String, Double)]): String =
       ts.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    def jraw(ts: Seq[(String, Seq[(Double, Long, Long)])]): String =
+    def jraw(ts: Seq[(String, Seq[Rep])]): String =
       ts.map { case (k, vs) =>
         s"\"" + k + "\":" + vs.map(v => r3(v._1)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
@@ -218,18 +206,23 @@ object Bench {
     // 43 at sf0.1 vs 24 at sf0.01 — the class of silent cost growth
     // wall time alone can't attribute). Emitting them per artifact
     // makes a data regen that doubles an iteration's step count
-    // visible as a diff, not a mystery slowdown.
-    val stepsJson = {
-      import scala.jdk.CollectionConverters._
-      graft.operators.Graph.FixpointSteps.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
-    }
+    // visible as a diff, not a mystery slowdown. Keyed by the registry
+    // key that recorded them, then by loop tag; keys without steps
+    // are left out.
+    val stepsJson = reported.sortBy(_._1)
+      .flatMap { case (k, r) => r.map(_.steps).filter(_.nonEmpty).map(k -> _) }
+      .map { case (k, steps) =>
+        jq(k) + ":" + steps.toSeq.sortBy(_._1)
+          .map { case (tag, n) => jq(tag) + ":" + n }.mkString("{", ",", "}")
+      }.mkString("{", ",", "}")
     val suspectJson = suspect.sortBy(_._1)
       .map { case (k, v) => jq(k) + ":" + r3(v) }.mkString("{", ",", "}")
     // [read, written] per key, from the reported (min-warm) rep
-    val shuffleJson = shuffleBytes.sortBy(_._1)
-      .map { case (k, (r, w)) => jq(k) + s":[$r,$w]" }
-      .mkString("{", ",", "}")
+    val shuffleJson = reported.sortBy(_._1)
+      .map { case (k, r) =>
+        val (rd, wr) = r.fold((-1L, -1L))(m => (m.shuffleRead, m.shuffleWrite))
+        jq(k) + s":[$rd,$wr]"
+      }.mkString("{", ",", "}")
     // headline fields FIRST in the full line (r16 verdict), per-key
     // maps after; the compact line repeats the headline alone so the
     // driver's bounded tail capture always holds one complete line
@@ -253,28 +246,37 @@ object Bench {
   /** Per-query seconds from the newest committed BENCH_LOCAL_r*.json
     * (the builder's clean full-registry artifact — preferred over the
     * driver's BENCH_r*.json, whose r12 close-out capture was itself
-    * the polluted run this gate exists to catch). Best-effort: any
-    * parse/IO failure returns empty, and the cross-run gate simply
-    * doesn't fire. */
+    * the polluted run this gate exists to catch). With `sf` given,
+    * an artifact whose `"sf"` names another data directory is skipped:
+    * a time at another scale is no reference (artifacts without `sf`
+    * still count). Best-effort: any parse/IO failure returns empty,
+    * and the cross-run gate simply doesn't fire. */
   private[graft] def loadPriorQueries(
-      dir: java.nio.file.Path = java.nio.file.Paths.get(".")): Map[String, Double] =
+      dir: java.nio.file.Path = java.nio.file.Paths.get("."),
+      sf: Option[String] = None): Map[String, Double] =
     try {
       import scala.jdk.CollectionConverters._
       val pat = java.util.regex.Pattern.compile(
         "BENCH_LOCAL_r0*([0-9]+)(_[0-9]+)?\\.json")
+      def read(p: java.nio.file.Path): String =
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      val sfOf = java.util.regex.Pattern.compile("\"sf\":\"([^\"]*)\"")
+      def sameSf(txt: String): Boolean = {
+        val m = sfOf.matcher(txt)
+        !m.find() || sf.forall(_ == m.group(1))
+      }
       val all = java.nio.file.Files.list(dir).iterator().asScala
         .flatMap { p =>
           val m = pat.matcher(p.getFileName.toString)
-          if (m.matches()) Some((m.group(1).toInt, p)) else None
-        }.toSeq
+          if (m.matches()) Some((m.group(1).toInt, read(p))) else None
+        }.filter(t => sameSf(t._2)).toSeq
       if (all.isEmpty) return Map.empty
       // A round can carry several artifacts (the timestamp-suffixed
       // siblings a late re-run writes); r12's round had one clean and
       // one polluted. The per-key MIN across the newest round's
       // artifacts is the clean reference by construction.
       val maxRound = all.map(_._1).max
-      def parse(p: java.nio.file.Path): Map[String, Double] = {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      def parse(txt: String): Map[String, Double] = {
         val qIdx = txt.lastIndexOf("\"queries\":")
         if (qIdx < 0) return Map.empty
         val kv = java.util.regex.Pattern
@@ -309,7 +311,7 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val (line, headline) = benchLine(spark, sfDir,
       SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) },
-      reps, prior = loadPriorQueries())
+      reps, prior = loadPriorQueries(sf = Some(sfDir)))
     println(line)
     // compact headline LAST: the driver keeps a bounded tail of
     // stdout, so the final short line is the one guaranteed to land

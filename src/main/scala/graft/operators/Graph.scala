@@ -43,18 +43,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** Fixpoint step count of the most recent run of each iterative
-    * operator, keyed by operator tag (r11 verdict: a data regen that
-    * silently doubles an iteration's step count must be visible in
-    * the bench artifact, not just buried in wall time — cost of the
-    * g2/g5/g8 family = step count × edge scale). The recorded count
-    * INCLUDES the final certifying period (the one whose unchanged
-    * exact-sum probe proves the fixpoint), so it overshoots the
-    * minimal step count by at most CkptEvery−1 — stable round over
-    * round as long as the cadence is. Bench reads this after each
-    * query and emits a `"steps"` map in the JSON line. */
-  val FixpointSteps = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   val Damping = 0.85
   /** PageRank steps. FIXED BY CONTRACT, not a convergence knob: the
     * query semantics are "the rank vector after exactly 10 damped
@@ -81,64 +69,29 @@ object Graph {
       pmod(col("dst0") + 1, lit(n))).otherwise(col("dst0")))
     .select(col("src"), col("j"), col("dst"))
 
+  /** N = the row count of the one-column `doc_id` frame `spine`, after
+    * refusing (typed, `key` named) an empty frame — min/max of zero
+    * rows are null — or ids that are not dense 0..N-1, which
+    * [[syntheticFwd]]'s `% n` targets need. One cheap aggregate, run
+    * before anything is pinned, so a refusal leaks nothing. */
+  private def denseN(spine: DataFrame, key: String): Long = {
+    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
+    val n = h.getLong(0)
+    require(n > 0, s"$key needs a non-empty documents frame")
+    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
+      s"$key needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    n
+  }
+
   def g1Pagerank(spark: SparkSession, dir: String,
                  iters: Int = Iters): DataFrame =
     g1Pagerank(Tables.load(spark, dir, "documents"), iters)
 
-  def g1Pagerank(docs0: DataFrame, iters: Int): DataFrame = {
-    val spine = docs0.select(col("doc_id"))
-    // the hash-derived dst lands in [0, N) — valid only if doc_ids are
-    // dense 0..N-1 (true for this corpus; one cheap aggregate guards
-    // it, BEFORE anything is pinned so a refusal leaks nothing)
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g1 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
-    val base = 0.15 / n // fl(0.15)/N — same literal-then-divide both engines
-    val docs = spine.persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = syntheticFwd(docs, n)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // (src = -1) sentinel rows keep zero-in-degree nodes in the
-      // aggregate (acc + 0.0 is a bit-exact no-op) — no per-step spine
-      // join needed, and n_in falls out as size(cs) - 1
-      val sentinel = docs.select(lit(-1L).as("src"), lit(0L).as("j"),
-        col("doc_id").as("dst"), lit(0.0).as("c"))
-
-      var ranks = docs.select(col("doc_id").as("v"),
-        lit(1.0 / n).as("r"))
-      for (t <- 1 to iters) {
-        val contribs = edges
-          .join(ranks, col("src") === col("v"))
-          .select(col("src"), col("j"), col("dst"),
-            (lit(Damping) * (col("r") / lit(OutDeg.toDouble))).as("c"))
-          .unionByName(sentinel)
-        val next = contribs
-          .groupBy(col("dst"))
-          .agg(sort_array(collect_list(struct(col("src"), col("j"), col("c"))))
-            .as("cs"))
-          .select(col("dst").as("v"),
-            aggregate(col("cs"), lit(base),
-              (acc, x) => acc + x.getField("c")).as("r"),
-            (size(col("cs")) - 1).cast("long").as("n_in"))
-        ranks = if (t % CkptEvery == 0 && t < iters) graft.Ckpt(next) else next
-      }
-      // Materialize the final ranks (Ckpt truncates lineage off the
-      // pinned frames) INSIDE the try — after it the pins are dead
-      // weight and the finally releases them on success and failure
-      // alike. No operator-internal persist may outlive its query
-      // (SURVEY §4 discipline); blocking so a caller observing
-      // getPersistentRDDs right after return sees them gone.
-      graft.Ckpt(ranks)
-        .select(col("v").as("doc_id"), round(col("r"), 6).as("pagerank"),
-          col("n_in"))
-        .orderBy("doc_id")
-    } finally {
-      edges.unpersist(blocking = true)
-      docs.unpersist(blocking = true)
+  def g1Pagerank(docs0: DataFrame, iters: Int): DataFrame =
+    pagerankCore(docs0, iters, "g1", "pagerank") { n =>
+      val base = 0.15 / n // fl(0.15)/N — same literal-then-divide both engines
+      (lit(1.0 / n), _ => lit(base))
     }
-  }
 
   /** g9: PERSONALIZED PageRank from a seed document — the restart
     * mass concentrates on the seed instead of spreading uniformly
@@ -155,27 +108,37 @@ object Graph {
             seed: Long = 0L, iters: Int = Iters): DataFrame =
     g9Ppr(Tables.load(spark, dir, "documents"), seed, iters)
 
-  def g9Ppr(docs0: DataFrame, seed: Long, iters: Int): DataFrame = {
+  def g9Ppr(docs0: DataFrame, seed: Long, iters: Int): DataFrame =
+    pagerankCore(docs0, iters, "g9", "ppr") { n =>
+      require(seed >= 0 && seed < n, s"g9 seed $seed outside 0..${n - 1}")
+      // restart vector: all mass on the seed (g1's uniform base and
+      // init, concentrated)
+      (when(col("doc_id") === seed, lit(1.0)).otherwise(lit(0.0)),
+        node => when(node === seed, lit(0.15)).otherwise(lit(0.0)))
+    }
+
+  /** The power iteration g1 and g9 share. `vectors(n)` gives the
+    * initial rank column (over `doc_id`) and the restart term each
+    * node's fold starts from (a function of its `dst`); it runs after
+    * the density check and before anything is pinned, so a refusal
+    * it raises leaks nothing. */
+  private def pagerankCore(docs0: DataFrame, iters: Int, key: String,
+      out: String)(vectors: Long => (Column, Column => Column)): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g9 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
-    require(seed >= 0 && seed < n, s"g9 seed $seed outside 0..${n - 1}")
-    require(iters >= 1, s"g9 needs at least one iteration, got $iters")
+    val n = denseN(spine, key)
+    val (init, restart) = vectors(n)
+    require(iters >= 1, s"$key needs at least one iteration, got $iters")
     val docs = spine.persist(StorageLevel.MEMORY_AND_DISK)
     val edges = syntheticFwd(docs, n)
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      // (src = -1) sentinel rows keep zero-in-degree nodes in the
+      // aggregate (acc + 0.0 is a bit-exact no-op) — no per-step spine
+      // join needed, and n_in falls out as size(cs) - 1
       val sentinel = docs.select(lit(-1L).as("src"), lit(0L).as("j"),
         col("doc_id").as("dst"), lit(0.0).as("c"))
-      // restart vector: all mass on the seed (g1's uniform base and
-      // init, concentrated)
-      def restart(node: org.apache.spark.sql.Column) =
-        when(node === seed, lit(0.15)).otherwise(lit(0.0))
-      var ranks = docs.select(col("doc_id").as("v"),
-        when(col("doc_id") === seed, lit(1.0)).otherwise(lit(0.0)).as("r"))
+      var ranks = docs.select(col("doc_id").as("v"), init.as("r"))
       for (t <- 1 to iters) {
         val contribs = edges
           .join(ranks, col("src") === col("v"))
@@ -192,8 +155,14 @@ object Graph {
             (size(col("cs")) - 1).cast("long").as("n_in"))
         ranks = if (t % CkptEvery == 0 && t < iters) graft.Ckpt(next) else next
       }
+      // Materialize the final ranks (Ckpt truncates lineage off the
+      // pinned frames) INSIDE the try — after it the pins are dead
+      // weight and the finally releases them on success and failure
+      // alike. No operator-internal persist may outlive its query
+      // (SURVEY §4 discipline); blocking so a caller observing
+      // getPersistentRDDs right after return sees them gone.
       graft.Ckpt(ranks)
-        .select(col("v").as("doc_id"), round(col("r"), 6).as("ppr"),
+        .select(col("v").as("doc_id"), round(col("r"), 6).as(out),
           col("n_in"))
         .orderBy("doc_id")
     } finally {
@@ -434,10 +403,7 @@ object Graph {
 
   def g10Lpa(docs0: DataFrame, iters: Int = LpaIters): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g10 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g10")
     // the derived MULTIgraph exactly as the oracle re-derives it:
     // both orientations, parallel edges kept (multiplicity weights
     // the plurality), no self-edges
@@ -573,10 +539,7 @@ object Graph {
   def g2Components(docs0: DataFrame,
                    maxSteps: Long = Long.MaxValue): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g2 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g2")
     val docs = spine.persist(StorageLevel.MEMORY_AND_DISK)
     val fwd = syntheticFwd(docs, n).select(col("src"), col("dst"))
     componentsCore(docs.select(col("doc_id").as("v")), fwd, maxSteps, Seq(docs))
@@ -625,7 +588,7 @@ object Graph {
       val init = nodes.select(col("v"), col("v").as("label"))
       val (labels, steps) = fixpoint(init, "label", cap, n,
         s"min-label propagation on $n nodes ($tag)")(labelStep(und, min))
-      FixpointSteps.put(tag, steps)
+      graft.Meter.steps(nodes.sparkSession, tag, steps)
       labels.groupBy(col("label").as("component"))
         .agg(count(lit(1)).as("n_members"), min(col("v")).as("min_doc"),
           max(col("v")).as("max_doc"))
@@ -798,10 +761,7 @@ object Graph {
   def g5Kcore(docs0: DataFrame,
               maxSteps: Long = Long.MaxValue): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g5 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g5")
     val fwd = syntheticFwd(docs, n)
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -886,7 +846,7 @@ object Graph {
           .agg(graft.GraftFunctions.hIndexAgg(col("cn")).as("c"))
           .select(col("dst").as("v"), col("c"))
       }
-      FixpointSteps.put(tag, steps)
+      graft.Meter.steps(fwd.sparkSession, tag, steps)
       cur.groupBy(col("c").as("coreness"))
         .agg(count(lit(1)).as("n_nodes"), min(col("v")).as("min_doc"),
           max(col("v")).as("max_doc"))
@@ -1093,10 +1053,7 @@ object Graph {
 
   def g4Assortativity(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g4 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g4")
     g4Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -1131,12 +1088,7 @@ object Graph {
 
   def g13DegreeHist(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    // min/max of zero rows are null — refuse loudly before reading them
-    require(n > 0, "g13 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g13 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g13")
     g13Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -1277,10 +1229,7 @@ object Graph {
 
   def g8Bfs(docs0: DataFrame, maxSteps: Long = Long.MaxValue): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g8 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g8")
     bfsCore(docs.select(col("doc_id").as("v")),
       syntheticFwd(docs, n).select(col("src"), col("dst")), 0L, maxSteps)
   }
@@ -1346,7 +1295,7 @@ object Graph {
       val (dist, steps) = fixpoint(init, "dist",
         math.min(maxSteps, n + CkptEvery), n,
         s"BFS relaxation on $n nodes ($tag)")(minPlusStep(und))
-      FixpointSteps.put(tag, steps)
+      graft.Meter.steps(nodes.sparkSession, tag, steps)
       dist.select(col("v"),
         when(col("dist") >= inf, lit(-1L)).otherwise(col("dist")).as("dist"))
         .orderBy("v")
@@ -1371,10 +1320,7 @@ object Graph {
 
   def g12Wsp(docs0: DataFrame, maxSteps: Long = Long.MaxValue): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g12 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g12")
     val wedges = syntheticFwd(docs, n).select(col("src"), col("dst"),
       (lit(1L) + pmod(col("src") + col("dst"), lit(WspMaxW.toLong))).as("w"))
     wspCore(docs.select(col("doc_id").as("v")), wedges, 0L, maxSteps,
@@ -1554,10 +1500,7 @@ object Graph {
   def g11Centrality(docs0: DataFrame, nSeeds: Int = G11Seeds,
                     maxSteps: Long = Long.MaxValue): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g11 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g11")
     require(nSeeds >= 1 && nSeeds <= n, s"g11 seeds $nSeeds outside 1..$n")
     val nodes = spine.select(col("doc_id").as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1574,7 +1517,7 @@ object Graph {
       val inf = n
       val (dist, steps) = multiSourceBfs(nodes, und, n, nSeeds, maxSteps,
         "multi-source BFS")
-      FixpointSteps.put("g11_centrality", steps)
+      graft.Meter.steps(nodes.sparkSession, "g11_centrality", steps)
       val contrib = dist
         .filter(col("dist") > 0 && col("dist") < inf)
         .groupBy(col("v"))
@@ -1667,10 +1610,7 @@ object Graph {
 
   def g3Triangles(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g3 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g3")
     g3Core(docs.agg(count(lit(1)).as("n_nodes")),
       simpleUndirected(syntheticFwd(docs, n)))
   }
@@ -1808,11 +1748,7 @@ object Graph {
 
   def g14LocalClustering(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g14 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g14 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g14")
     g14Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -1923,11 +1859,7 @@ object Graph {
   def g15Diameter(docs0: DataFrame, maxSteps: Long = Long.MaxValue)
       : DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g15 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g15 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g15")
     g15Core(docs.select(col("doc_id").as("v")),
       syntheticFwd(docs, n).select(col("src"), col("dst")), 0L, maxSteps)
   }
@@ -2084,10 +2016,7 @@ object Graph {
   def g16Betweenness(docs0: DataFrame, nSeeds: Int = G16Seeds,
                      maxSteps: Long = Long.MaxValue): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g16 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g16")
     require(nSeeds >= 1 && nSeeds <= n, s"g16 seeds $nSeeds outside 1..$n")
     val nodes = spine.select(col("doc_id").as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2115,7 +2044,7 @@ object Graph {
       val maxLev = Option(distF.filter(col("dist") < inf)
         .agg(max(col("dist"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-      FixpointSteps.put("g16_betweenness", steps + 2 * maxLev)
+      graft.Meter.steps(nodes.sparkSession, "g16_betweenness", steps + 2 * maxLev)
       // ---- phase 2: path counts, level-synchronous ----
       val lvlSigma = new scala.collection.mutable.ArrayBuffer[DataFrame]()
       var sig = graft.Ckpt(distF.filter(col("dist") === 0L)
@@ -2306,11 +2235,7 @@ object Graph {
 
   def g17LinkPredict(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g17 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g17 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g17")
     g17Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -2426,11 +2351,7 @@ object Graph {
 
   def g27JaccardLink(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g27 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g27 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g27")
     g27Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -2553,7 +2474,7 @@ object Graph {
     * root — a FULL component collapse, so no non-forest edge can ever
     * look "outgoing" in a later round. Convergence = the exact
     * outgoing-edge count probe hitting 0 (rounds recorded in
-    * FixpointSteps), budget [[MsfRounds]] LOUD.
+    * the bench's fixpoint steps), budget [[MsfRounds]] LOUD.
     *
     * Determinism: everything is exact integer arithmetic — keys,
     * labels, counts; no float enters at any point (the output is the
@@ -2909,7 +2830,7 @@ object Graph {
         .groupBy("ca", "cb").agg(min(col("key")).as("key")))
       more = ecur.count() > 0L
     }
-    FixpointSteps.put(tag, round)
+    graft.Meter.steps(spark, tag, round)
     // bloom prefilter before the forest semi-join (r19 #2, g24's
     // verdict-blessed shape): only forest edges survive (≤ nodes − 1
     // of the full edge frame — <1% on the co-purchase graph), yet the
@@ -3175,11 +3096,7 @@ object Graph {
 
   def g18Modularity(docs0: DataFrame, iters: Int = LpaIters): DataFrame = {
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g18 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g18 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g18")
     g18Core(simpleUndirected(syntheticFwd(docs, n)), iters)
   }
 
@@ -3330,11 +3247,7 @@ object Graph {
 
   def g19Scc(docs0: DataFrame, maxRounds: Long = Long.MaxValue): DataFrame = {
     val spine = docs0.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g19 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g19 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g19")
     sccCore(spine.select(col("doc_id").as("v")),
       syntheticFwd(spine, n).select(col("src"), col("dst")), maxRounds,
       "g19_scc")
@@ -3423,8 +3336,8 @@ object Graph {
       rounds += 1
       nLeft = remaining.count()
     }
-    FixpointSteps.put(tag, innerSteps)
-    FixpointSteps.put(tag + "_rounds", rounds)
+    graft.Meter.steps(nodes0.sparkSession, tag, innerSteps)
+    graft.Meter.steps(nodes0.sparkSession, tag + "_rounds", rounds)
     if (assigned == null)
       nodes0.select(col("v"), col("v").as("component")).limit(0)
     else assigned
@@ -3486,12 +3399,7 @@ object Graph {
   def g20Condensation(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val spine = docs.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")),
-      max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g20 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g20 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g20")
     val edges = syntheticFwd(spine, n).select(col("src"), col("dst"))
     condensationCore(spine.select(col("doc_id").as("v")), edges,
       "g20_condensation")
@@ -3539,7 +3447,7 @@ object Graph {
         .select(col("c"),
           greatest(col("lvl"), coalesce(col("cand"), lit(0L))).as("lvl"))
     }
-    FixpointSteps.put(tag, steps)
+    graft.Meter.steps(nodes.sparkSession, tag, steps)
     lvl.join(cnodes, col("c") === col("component"))
       .groupBy(col("lvl").as("level"))
       .agg(count(lit(1)).as("n_sccs"), sum(col("n_members")).as("n_nodes"),
@@ -3607,11 +3515,7 @@ object Graph {
   def g21Reciprocity(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val spine = docs.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")),
-      max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g21 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g21")
     g21ReciprocityEdges(syntheticFwd(spine, n).select(col("src"), col("dst")))
   }
 
@@ -3687,11 +3591,7 @@ object Graph {
       iters: Int = Iters): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val spine = docs.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")),
-      max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g23 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g23")
     require(iters >= 1, s"g23 needs at least one iteration, got $iters")
     hitsCore(spine, syntheticFwd(spine, n), iters)
   }
@@ -3873,11 +3773,7 @@ object Graph {
   def g22RandomWalks(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val spine = docs.select(col("doc_id"))
-    val h = spine.agg(count(lit(1)), min(col("doc_id")),
-      max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g22 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(spine, "g22")
     g22RandomWalksEdges(syntheticFwd(spine, n).select(col("src"), col("dst")),
       spine.select(col("doc_id").as("v")))
   }
@@ -4114,7 +4010,7 @@ object Graph {
       steps += 1
       if (m == n) converged = true else { e = graft.Ckpt(next); n = m }
     }
-    FixpointSteps.put(tag, steps)
+    graft.Meter.steps(edges0.sparkSession, tag, steps)
     supJoined
       .groupBy(col("sup").as("support")).agg(count(lit(1)).as("n_edges"))
       .orderBy("support")
@@ -4145,11 +4041,7 @@ object Graph {
   def g26Homophily(spark: SparkSession, dir: String): DataFrame = {
     val docs0 = Tables.load(spark, dir, "documents")
     val docs = docs0.select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")),
-      max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g26 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g26")
     g26HomophilyEdges(
       syntheticFwd(docs, n).select(col("src"), col("dst")).distinct(),
       docs0.select(col("doc_id").as("node"), col("source").as("cat")))
@@ -4288,11 +4180,7 @@ object Graph {
     * Nothing iterated; output is one row per threshold. */
   def g31RichClub(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents").select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g31 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g31 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g31")
     g31Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 
@@ -4392,11 +4280,7 @@ object Graph {
     * nothing iterated. */
   def g32KnnDegree(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents").select(col("doc_id"))
-    val h = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).head()
-    val n = h.getLong(0)
-    require(n > 0, "g32 needs a non-empty documents frame")
-    require(h.getLong(1) == 0L && h.getLong(2) == n - 1,
-      s"g32 needs dense doc_ids 0..N-1, got [${h.get(1)}, ${h.get(2)}] of $n")
+    val n = denseN(docs, "g32")
     g32Core(simpleUndirected(syntheticFwd(docs, n)))
   }
 

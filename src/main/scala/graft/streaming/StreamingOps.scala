@@ -22,6 +22,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
+  /** Epoch microseconds of a timestamp, the event-time unit of every
+    * typed stream. Full precision: `getTime` alone is millisecond-
+    * truncated, which made sub-millisecond-spaced events order and
+    * gap differently from the batch `unix_micros` path. */
+  private def us(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
+  /** Round half-up to 6 decimals, the batch operators' `round(x, 6)`. */
+  private def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
+    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
 
@@ -182,8 +193,6 @@ object StreamingOps {
   def asofAttribute(events: Dataset[Event])
       (implicit spark: SparkSession): Dataset[AsofOut] = {
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     def side(e: Event): Int = if (e.event_type == "click") 0 else 1
     events
       .filter(e => e.event_type == "click" || e.event_type == "purchase")
@@ -245,8 +254,6 @@ object StreamingOps {
       latenessMinutes: Option[Int] = None)
       (implicit spark: SparkSession): Dataset[FunnelOut] = {
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     val idleMs = idleMinutes.toLong * 60 * 1000
     val lateness = latenessMinutes.getOrElse(idleMinutes)
     val stages = Map("signup" -> 1, "view" -> 2, "click" -> 3, "purchase" -> 4)
@@ -319,8 +326,6 @@ object StreamingOps {
       latenessMinutes: Option[Int] = None)
       (implicit spark: SparkSession): Dataset[TransOut] = {
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     val idleMs = idleMinutes.toLong * 60 * 1000
     events
       .withWatermark("ts", s"${latenessMinutes.getOrElse(idleMinutes)} minutes")
@@ -369,8 +374,6 @@ object StreamingOps {
       latenessMinutes: Option[Int] = None)
       (implicit spark: SparkSession): Dataset[PathOut] = {
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     val idleMs = idleMinutes.toLong * 60 * 1000
     val idleUs = idleMinutes.toLong * 60 * 1000000
     events
@@ -451,13 +454,6 @@ object StreamingOps {
       (implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
     val gapUs = gapMinutes.toLong * 60 * 1000 * 1000
-
-    // Full-precision microseconds (getTime alone is millisecond-
-    // truncated, which made sub-millisecond-spaced events order and
-    // gap differently from the batch unix_micros path).
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-
     events
       .withWatermark("ts", s"$gapMinutes minutes")
       .groupByKey(_.user_id)
@@ -540,8 +536,6 @@ object StreamingOps {
   def latenessStream(events: Dataset[Event])
       (implicit spark: SparkSession): Dataset[LateOut] = {
     import spark.implicits._
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     events
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[LateState, LateOut](
@@ -620,8 +614,6 @@ object StreamingOps {
     import spark.implicits._
     val DayUs = 86400000000L
     val DayMs = 86400000L
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     // Spark's round(double, n) is BigDecimal.valueOf(x).setScale(n,
     // HALF_UP).toDouble; the cast to DECIMAL(38,9) re-scales the
     // rounded double — replay both steps exactly
@@ -713,8 +705,6 @@ object StreamingOps {
     val L = graft.operators.Events.SeasonalLag.toLong
     val DayUs = 86400000000L
     val DayMs = 86400000L
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     events
       .withWatermark("ts", "1 day")
       .groupByKey(_.event_type)
@@ -781,8 +771,6 @@ object StreamingOps {
     import spark.implicits._
     val lookbackUs =
       graft.operators.Events.AttributionLookbackDays.toLong * 86400000000L
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
     events
       .filter(e => e.event_type == "click" || e.event_type == "view" ||
         e.event_type == "purchase")
@@ -863,10 +851,6 @@ object StreamingOps {
         .movePointRight(13).toBigIntegerExact)
     val DayUs = 86400000000L
     val DayMs = 86400000L
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
     events
       .withWatermark("ts", "1 day")
       .groupByKey(_.event_type)
@@ -955,10 +939,6 @@ object StreamingOps {
     val a1 = 1.0 - a; val be1 = 1.0 - be; val g1 = 1.0 - g
     val DayUs = 86400000000L
     val DayMs = 86400000L
-    def us(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
     events
       .withWatermark("ts", "1 day")
       .groupByKey(_.event_type)

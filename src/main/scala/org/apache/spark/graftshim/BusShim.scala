@@ -1,11 +1,12 @@
 package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 
-/** Listener-bus flush for metric snapshots (lives under o.a.s to see
-  * the private[spark] bus — the same minimal-bridge pattern as
+/** The private[spark] listener bus, seen from graft (lives under o.a.s
+  * for that — the same minimal-bridge pattern as
   * sql.graftshim.GraftShim). Spark delivers listener events
-  * asynchronously; a bench that reads its accumulators right after an
+  * asynchronously; a meter that reads its counts right after an
   * action would race the queue and attribute one query's shuffle bytes
   * to the next. `waitUntilEmpty` drains every queue (it's what Spark's
   * own test harness uses between action and assertion). */
@@ -13,4 +14,8 @@ object BusShim {
   def flushListeners(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** Queue a driver-side event behind every event posted before it. */
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit =
+    sc.listenerBus.post(event)
 }

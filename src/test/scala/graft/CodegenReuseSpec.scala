@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSessionExtensions
 
 import graft.operators.Dedup
@@ -17,7 +16,6 @@ import graft.sources.{Export, Ingest}
   * gates, dedup and keep-best, decontamination, incremental dedup,
   * export) and the fixed bpaotu rollups. */
 class CodegenReuseSpec extends SparkSpec {
-  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   private lazy val out = Files.createTempDirectory("graft-codegen").toString
   private def docs = Tables.parallel(Tables.load(spark, sfDir, "documents"))
   private def registry(key: String): () => Unit =
@@ -53,9 +51,7 @@ class CodegenReuseSpec extends SparkSpec {
   test("a second run of each pipeline step and rollup reuses its generated code") {
     val again = steps.map { case (name, run) =>
       run()
-      val before = compiled
-      run()
-      name -> (compiled - before)
+      name -> Meter.measure(spark)(run())._2.classes
     }
     assert(again.forall { case (name, n) => n <= aqeVariants.getOrElse(name, 0L) },
       s"classes compiled by a repeated run: ${again.mkString(", ")}")

@@ -114,30 +114,34 @@ class ContractSpec extends SparkSpec {
     // regen that silently doubles it must be visible in the committed
     // artifact, not just as an unattributed wall-time jump.
     import org.apache.spark.sql.SparkSession
-    graft.operators.Graph.FixpointSteps.clear()
-    val (line, _) = Bench.benchLine(spark, tinySf, Map(
-      "cc_probe" -> ((s: SparkSession, _: String) => {
-        import s.implicits._
-        graft.operators.Graph.g2ComponentsEdges(
-          Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("src", "dst"))
-      })), reps = 1)
-    val steps = graft.operators.Graph.FixpointSteps.getOrDefault("g2_edges", 0L)
+    def cc(s: SparkSession) = {
+      import s.implicits._
+      graft.operators.Graph.g2ComponentsEdges(
+        Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("src", "dst"))
+    }
+    val steps = Meter.measure(spark)(cc(spark))._2.steps.getOrElse("g2_edges", 0L)
     assert(steps > 0, s"no step count recorded: $steps")
-    assert(line.contains(s""""fixpoint_steps":{"g2_edges":$steps}"""),
+    val (line, _) = Bench.benchLine(spark, tinySf, Map(
+      "cc_probe" -> ((s: SparkSession, _: String) => cc(s)),
+      "plain_probe" -> ((s: SparkSession, d: String) =>
+        Tables.load(s, d, "region"))), reps = 1)
+    assert(line.contains(
+      s""""fixpoint_steps":{"cc_probe":{"g2_edges":$steps}}"""),
       s"steps map not in artifact: $line")
   }
 
   test("benchLine clears stale fixpoint step tags from earlier runs") {
-    // FixpointSteps is process-global; r12's ADVICE: a bench artifact
-    // in a JVM that ran other queries first carried their tags,
-    // misattributing step counts across artifacts. benchLine must
-    // clear the map itself, not trust callers to.
+    // r12's ADVICE: a bench artifact in a JVM that ran other queries
+    // first carried their tags, misattributing step counts across
+    // artifacts. A fixpoint that ran before benchLine must not leak.
     import org.apache.spark.sql.SparkSession
-    graft.operators.Graph.FixpointSteps.put("stale_tag_from_last_run", 99L)
+    import spark.implicits._
+    graft.operators.Graph.g2ComponentsEdges(
+      Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")).collect()
     val (line, _) = Bench.benchLine(spark, tinySf, Map(
       "plain_probe" -> ((s: SparkSession, d: String) =>
         Tables.load(s, d, "region"))), reps = 1)
-    assert(!line.contains("stale_tag_from_last_run"),
+    assert(!line.contains("g2_edges"),
       s"stale fixpoint tag leaked into artifact: $line")
     assert(line.contains(""""fixpoint_steps":{}"""),
       s"expected empty steps map for a non-iterative suite: $line")
@@ -182,6 +186,19 @@ class ContractSpec extends SparkSpec {
     val prior = Bench.loadPriorQueries(dir)
     assert(prior == Map("q1" -> 0.86, "g9" -> 6.25, "extra" -> 2.0),
       s"got $prior")
+  }
+
+  test("loadPriorQueries ignores artifacts from another scale factor") {
+    // every tools/run_bench.sh run in one scratch dir lands in the same
+    // round; an sf0.001 time must not gate an sf0.1 run
+    val dir = java.nio.file.Files.createTempDirectory("bench_prior_sf")
+    def w(name: String, body: String): Unit =
+      java.nio.file.Files.write(dir.resolve(name), body.getBytes("UTF-8"))
+    w("BENCH_LOCAL_r1.json", """{"sf":"/d/sf0.1","queries":{"q1":4.0,"g9":3.0}}""")
+    w("BENCH_LOCAL_r1_5.json", """{"sf":"/d/sf0.001","queries":{"q1":0.1,"x":0.5}}""")
+    w("BENCH_LOCAL_r1_6.json", """{"queries":{"g9":2.0}}""")
+    val prior = Bench.loadPriorQueries(dir, sf = Some("/d/sf0.1"))
+    assert(prior == Map("q1" -> 4.0, "g9" -> 2.0), s"got $prior")
   }
 
   test("per-query shuffle bytes reach the bench artifact") {

@@ -62,6 +62,20 @@ class GraphSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       Graph.g1Pagerank(sparse, 2).collect()
     }
+    val none = intercept[IllegalArgumentException](
+      Graph.g1Pagerank(Seq.empty[Long].toDF("doc_id"), 2))
+    assert(none.getMessage.contains("non-empty"), none.getMessage)
+  }
+
+  test("pagerank and ppr refuse zero steps, typed, before pinning anything") {
+    import spark.implicits._
+    val docs = (0L until 8L).toDF("doc_id")
+    val before = memPinnedIds
+    val e1 = intercept[IllegalArgumentException](Graph.g1Pagerank(docs, 0))
+    assert(e1.getMessage.contains("g1 needs at least one iteration"), e1.getMessage)
+    val e9 = intercept[IllegalArgumentException](Graph.g9Ppr(docs, 0L, 0))
+    assert(e9.getMessage.contains("g9 needs at least one iteration"), e9.getMessage)
+    assert((memPinnedIds -- before).isEmpty, "a refused run left pinned RDDs")
   }
 
   /** Union-find over the derived edges — an independent CC algorithm
@@ -1031,7 +1045,7 @@ class GraphSpec extends SparkSpec {
       (900000001L, 900000002L)), s"wide ids: $gotWide")
     // corpus: acyclic (< nodes), spanning (the sf0.001 co-purchase
     // graph is connected: exactly nodes − 1 edges), rounds recorded
-    val sf = Graph.g28Msf(spark, sfDir).collect()
+    val (sf, reading) = Meter.measure(spark)(Graph.g28Msf(spark, sfDir).collect())
     val l = graft.Tables.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     val nodes = l.as("x")
@@ -1042,7 +1056,7 @@ class GraphSpec extends SparkSpec {
       .distinct().count()
     assert(sf.length.toLong == nodes - 1,
       s"forest size ${sf.length} vs nodes $nodes")
-    assert(Option(Graph.FixpointSteps.get("g28_msf")).exists(_ >= 1L),
+    assert(reading.steps.get("g28_msf").exists(_ >= 1L),
       "rounds not recorded")
   }
 
@@ -1410,10 +1424,10 @@ class GraphSpec extends SparkSpec {
     assert(boom.getMessage.contains("not converged"), boom.getMessage)
     // corpus: non-vacuous truss, every support >= k-2, exact histogram
     // total matches a recount
-    val sf = Graph.g24Ktruss(spark, sfDir).collect()
+    val (sf, reading) = Meter.measure(spark)(Graph.g24Ktruss(spark, sfDir).collect())
     assert(sf.nonEmpty && sf.forall(_.getLong(0) >= Graph.TrussK - 2),
       s"corpus truss: ${sf.mkString(";")}")
-    assert(Graph.FixpointSteps.get("g24_ktruss") <= Graph.TrussRounds,
+    assert(reading.steps.get("g24_ktruss").exists(_ <= Graph.TrussRounds),
       "peel budget exceeded")
   }
 
@@ -1530,26 +1544,6 @@ class GraphSpec extends SparkSpec {
     sf.foreach { r => assert(r.getDouble(3) >= 1.0, r.toString) }
   }
 
-  /** Jobs started while `body` runs. The listener bus is drained
-    * through BusShim before the count is read, so a job-start event
-    * still queued when the action returns is not missed. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graftshim.BusShim.flushListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graftshim.BusShim.flushListeners(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("fixpoint loops keep their job budget and step counts") {
     import spark.implicits._
     // the 40-node path (diameter 39); g12 adds weights 1..3, g19 takes
@@ -1585,9 +1579,9 @@ class GraphSpec extends SparkSpec {
         () => Graph.g16Betweenness(docs).collect()))
     pins.foreach { case (tag, budget, steps, run) =>
       run() // warm: codegen and broadcast reuse settle
-      val jobs = jobsOf(run())
-      assert(jobs <= budget, s"$tag ran $jobs jobs, budget $budget")
-      assert(Graph.FixpointSteps.get(tag) == steps, tag)
+      val (_, r) = Meter.measure(spark)(run())
+      assert(r.jobs <= budget, s"$tag ran ${r.jobs} jobs, budget $budget")
+      assert(r.steps.get(tag).contains(steps), tag)
     }
   }
 
@@ -1606,13 +1600,14 @@ class GraphSpec extends SparkSpec {
         ("g20_edges", "level,n_sccs,n_nodes,min_comp,max_comp",
           () => Graph.g20CondensationEdges(empty)))
     cases.foreach { case (tag, cols, run) =>
-      Graph.FixpointSteps.put(tag, -1L)
-      val res = run()
+      val ((res, rows), r) = Meter.measure(spark) {
+        val res = run(); (res, res.collect())
+      }
       assert(res.columns.mkString(",") == cols, tag)
       assert(res.schema.forall(_.dataType ==
         org.apache.spark.sql.types.LongType), s"$tag: ${res.schema}")
-      assert(res.collect().isEmpty, tag)
-      assert(Graph.FixpointSteps.get(tag) == 0L, tag)
+      assert(rows.isEmpty, tag)
+      assert(r.steps.get(tag).contains(0L), tag)
     }
     // a BFS source cannot be a node of an empty graph: both entries
     // refuse loudly and typed, before any fixpoint state is built

@@ -8,6 +8,9 @@ both artifacts this classifies a wall-time jump:
   - REGRESSION: wall jumped AND a plan invariant moved
     (shuffle_bytes [fetch, write] or fixpoint_steps differ) — the
     plan itself changed, the number is real. Exit 1.
+    fixpoint_steps is {key: {tag: steps}}, so a move in any loop a key
+    runs counts. Against an older flat {tag: steps} artifact every key
+    with steps reads "steps moved" (the conservative direction).
   - NOISE: wall jumped but shuffle bytes AND step counts are
     byte-identical — the same plan ran slower on a loaded box.
     Reported, exit 0 (this is the manual cross-check the r16 judge
@@ -83,26 +86,35 @@ def selftest():
     """Prove the adjudicator can produce each verdict (check_oracle's
     --selftest discipline: a gate that can't reject proves nothing)."""
     import tempfile
-    keys = ("noise", "reg", "regyuns", "uns", "cold", "ok")
+    keys = ("noise", "reg", "regyuns", "uns", "cold", "ok",
+            "stepmv", "stepsame")
     old = {"queries": {k: 1.0 for k in keys},
            "raw": {k: [1.0] for k in keys},
            "shuffle_bytes": {k: [1000, 1000] for k in keys},
-           "fixpoint_steps": {}}
+           "fixpoint_steps": {"stepmv": {"g15_pass1": 6, "g15_pass2": 9},
+                              "stepsame": {"g20_scc": 4, "g20_scc_rounds": 2}}}
     new = {"queries": {"noise": 2.0, "reg": 2.0, "regyuns": 2.0,
-                       "uns": 2.0, "cold": 2.0, "ok": 1.01},
+                       "uns": 2.0, "cold": 2.0, "ok": 1.01,
+                       "stepmv": 2.0, "stepsame": 2.0},
            # regyuns: telemetry moved AND warm spread 4x -> REGRESSION
            #   (not acquitted by instability — the r17 ADVICE case);
            # uns: telemetry same, warm spread 4x -> UNSTABLE;
            # cold: telemetry same, 9 s COLD rep but stable warm reps
            #   -> NOISE, and its variance row must not read unstable;
            # noise: +0.5% bytes (within 1%); reg: +50% -> REGRESSION
+           # stepmv: one sub-tag of the key moved -> REGRESSION;
+           # stepsame: identical nested steps -> NOISE
            "raw": {"noise": [2.0, 2.0], "reg": [2.0, 2.0],
                    "regyuns": [2.0, 2.0, 8.0], "uns": [2.0, 2.0, 8.0],
-                   "cold": [9.0, 2.0, 2.0], "ok": [1.01]},
+                   "cold": [9.0, 2.0, 2.0], "ok": [1.01],
+                   "stepmv": [2.0, 2.0], "stepsame": [2.0, 2.0]},
            "shuffle_bytes": {"noise": [1005, 1005], "reg": [1500, 1500],
                              "regyuns": [1500, 1500], "uns": [1000, 1000],
-                             "cold": [1000, 1000], "ok": [1000, 1000]},
-           "fixpoint_steps": {}}
+                             "cold": [1000, 1000], "ok": [1000, 1000],
+                             "stepmv": [1000, 1000],
+                             "stepsame": [1000, 1000]},
+           "fixpoint_steps": {"stepmv": {"g15_pass1": 6, "g15_pass2": 10},
+                              "stepsame": {"g20_scc": 4, "g20_scc_rounds": 2}}}
     d = tempfile.mkdtemp()
     for nm, art in [("old", old), ("new", new)]:
         with open(f"{d}/{nm}.json", "w") as f:
@@ -116,7 +128,8 @@ def selftest():
     v = {k: out["deltas"][k].get("verdict") for k in keys}
     assert v == {"noise": "NOISE", "reg": "REGRESSION",
                  "regyuns": "REGRESSION", "uns": "UNSTABLE",
-                 "cold": "NOISE", "ok": None}, f"verdicts wrong: {v}"
+                 "cold": "NOISE", "ok": None, "stepmv": "REGRESSION",
+                 "stepsame": "NOISE"}, f"verdicts wrong: {v}"
     assert out["deltas"]["regyuns"].get("warm_unstable") is True, \
         "regression on unstable warm reps must carry the context flag"
     assert not out["variance"]["cold"]["unstable"], \
@@ -124,7 +137,8 @@ def selftest():
     assert out["variance"]["cold"]["spread"] == 1.0, \
         f"cold warm spread wrong: {out['variance']['cold']}"
     print("[bench-check] selftest OK (noise/regression/regression-"
-          "over-unstable/unstable/cold-rep/quiet all classified)")
+          "over-unstable/unstable/cold-rep/quiet/step-move/same-steps "
+          "all classified)")
 
 
 def main():
